@@ -35,48 +35,68 @@ def test_rule_count_matches_reference():
 
 
 def test_sql_kernel_matches_column_api_kernel(spark):
-    """The SQL-text kernel (comparison_bf_sqls) and the retained
-    Column-API builder must be value-identical on a pair grid covering
-    every cascade level (nulls, exact, fuzzy, fallthrough, TF present)."""
-    import itertools
-
+    """The production kernel (score_pairs: compact rows, packed histogram
+    arrays, __oac_sig, __nt1_dg, __pc_area/__pc_in) and the retained
+    Column-API reference over the uncompacted rows must give identical
+    BFs on a pair grid covering every cascade level (nulls, exact, digit
+    run, fuzzy/area/incode postcode, fallthrough, TF present/absent)."""
     from uk_address_matcher_spark.scoring import (
         _comparison_bfs_column_api,
-        comparison_bfs,
+        attach_numeric_tf,
     )
 
     variants = [
-        _rec("x"),  # all null
-        _rec("x", n1="10", n2="12", n3="3", pc="SW1A 2AA",
+        _rec("v0"),  # all null
+        _rec("v1", n1="10", n2="12", n3="3", pc="SW1A 2AA",
              oac="10 DOWNING STREET", fp="GROUND FLOOR", fl="A",
              hist=[("DOWNING", 1, 1e-5), ("STREET", 2, 0.02)],
              cet=[("LONDON", 1, 0.002)]),
-        _rec("x", n1="10A", n2="10", pc="SW1A 2AB", oac="OTHER",
+        _rec("v2", n1="10A", n2="10", pc="SW1A 2AB", oac="OTHER",
              fl="10", hist=[("RARE", 1, 1e-9)], cet=[("YORK", 1, 0.5)]),
-        _rec("x", n1="7", pc="ZZ9 9ZZ", fp="BASEMENT",
+        _rec("v3", n1="7", pc="ZZ9 9ZZ", fp="BASEMENT",
              hist=[("DOWNING", 3, 1e-5)]),
+        _rec("v4", n1="12", n3="3", pc="SW1A 9XY", oac="10 DOWNING STREET",
+             hist=[("STREET", 1, 0.02), ("DOWNING", 2, 1e-5)],
+             cet=[("LONDON", 2, 0.002)]),
+        _rec("v5", n1="10", n2="3", pc="E1 2AA", fl="B",
+             hist=[("STREET", 3, 0.02)], cet=[("LONDON", 1, 0.002)]),
     ]
-    base = spark.createDataFrame(
-        [tuple([f"v{i}"] + list(v[1:])) for i, v in enumerate(variants)],
-        CLEANED_SCHEMA,
+    cleaned = spark.createDataFrame(variants, CLEANED_SCHEMA)
+    numeric_tf = spark.createDataFrame(
+        [("10", 0.01), ("12", 0.02), ("3", 0.05), ("7", 0.001)],
+        "numeric_token string, tf_numeric_token double",
     )
-    left = base.select([F.col(c).alias(f"{c}_l") for c in base.columns])
-    right = base.select([F.col(c).alias(f"{c}_r") for c in base.columns])
-    df = left.crossJoin(right)
-    for k in (1, 2, 3):
-        df = df.withColumn(f"tf_numeric_token_{k}_l", F.lit(0.01))
-        df = df.withColumn(f"tf_numeric_token_{k}_r", F.lit(0.02))
-    sql_bfs = comparison_bfs(oac_sig=False)
-    col_bfs = _comparison_bfs_column_api(oac_sig=False)
-    checks = df
-    for name in sql_bfs:
-        checks = checks.withColumn(f"s_{name}", sql_bfs[name]).withColumn(
-            f"c_{name}", col_bfs[name]
-        )
+    ids = cleaned.select("unique_id")
+    pairs = ids.withColumnRenamed("unique_id", "unique_id_l").crossJoin(
+        ids.withColumnRenamed("unique_id", "unique_id_r")
+    )
+    prod = score_pairs(pairs, cleaned, cleaned, numeric_tf, retain_bf=True)
+
+    ref = cleaned.select([F.col(c).alias(f"{c}_l") for c in cleaned.columns]).crossJoin(
+        cleaned.select([F.col(c).alias(f"{c}_r") for c in cleaned.columns])
+    )
+    ref = attach_numeric_tf(attach_numeric_tf(ref, numeric_tf, "_l"), numeric_tf, "_r")
+    col_bfs = _comparison_bfs_column_api()
+    ref = ref.select(
+        "unique_id_l", "unique_id_r",
+        *[col_bfs[n].alias(f"c_{n}") for n in col_bfs],
+    )
+    checks = prod.select(
+        "unique_id_l", "unique_id_r", *[F.col(n).alias(f"s_{n}") for n in col_bfs]
+    ).join(ref, ["unique_id_l", "unique_id_r"])
+    assert checks.count() == len(variants) ** 2
     bad = checks.filter(
-        " OR ".join(f"(s_{n} <=> c_{n}) = false" for n in sql_bfs)
-    ).count()
-    assert bad == 0
+        " OR ".join(f"(s_{n} <=> c_{n}) = false" for n in col_bfs)
+    ).collect()
+    assert bad == []
+    # the grid really reaches the levels the compact columns feed
+    got = {
+        n: {r[0] for r in checks.select(f"s_{n}").distinct().collect()}
+        for n in col_bfs
+    }
+    assert {3000.0, 2000.0} <= got["bf_postcode"]
+    assert len(got["bf_numeric_token_1"]) >= 4
+    assert len(got["bf_token_rel_freq_arr_hist"]) >= 4
 
 
 def test_null_components_emit_no_key(spark):

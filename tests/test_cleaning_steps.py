@@ -140,11 +140,13 @@ def _tiny_corpus(spark):
 
 
 def test_tf_attachment_join_vs_broadcast_identical(spark):
+    # the pipeline's broadcast Arrow UDF vs the join-based reference, on
+    # the same pre-TF frame (tokens absent from the table take the default)
     df = _tiny_corpus(spark)
-    tf = get_address_token_frequencies(df)
-    cet = get_common_end_tokens(df, min_share=0.3)
-    a = clean_addresses(df, tf, cet, use_broadcast_tf=True)
-    b = clean_addresses(df, tf, cet, use_broadcast_tf=False)
+    tf = get_address_token_frequencies(df).filter(F.col("token") != "ACACIA")
+    pre_tf = run_queue(df, QUEUE_PRE_TF)
+    a = S.add_term_frequencies_broadcast(pre_tf, tf)
+    b = S.add_term_frequencies(pre_tf, tf)
     ra = {r["unique_id"]: r.asDict() for r in a.collect()}
     rb = {r["unique_id"]: r.asDict() for r in b.collect()}
     assert ra == rb

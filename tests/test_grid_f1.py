@@ -30,6 +30,21 @@ def test_pairwise_f1_meets_target(spark, grid_run):
     assert res["f1"] >= 0.99, res
 
 
+# exact output pin: prediction count and the order-independent checksum
+# perfbench uses (each weight rounded to a fixed decimal before summing)
+GOLDEN_PREDICTIONS = 14588
+GOLDEN_WEIGHT_SUM = "-12274.083164345"
+
+
+def test_golden_output_pin(spark, grid_run):
+    _, improved = grid_run
+    r = improved.agg(
+        F.count("*").alias("n"),
+        F.sum(F.col("match_weight").cast("decimal(38,9)")).alias("s"),
+    ).collect()[0]
+    assert (r["n"], str(r["s"])) == (GOLDEN_PREDICTIONS, GOLDEN_WEIGHT_SUM)
+
+
 def test_salted_blocking_same_result(spark, grid_run):
     # explicit salting must not change the candidate-pair set
     from uk_address_matcher_spark.blocking import block

@@ -74,8 +74,8 @@ def test_block_on_quotes_odd_column_names(spark):
 def test_sql_text_deterministic_across_calls():
     """scoped gensym: the same builder emits identical SQL text on every
     call (text-keyed plan caching / diffing works)."""
-    a = comparison_bf_sqls(oac_sig=True)
-    b = comparison_bf_sqls(oac_sig=True)
+    a = comparison_bf_sqls()
+    b = comparison_bf_sqls()
     assert a == b
 
 

@@ -76,15 +76,13 @@ def clean_addresses(
     df: DataFrame,
     rel_tok_freq: DataFrame,
     common_end_tokens: list[str],
-    use_broadcast_tf: bool = True,
     derive_adjacency: bool = False,
     adjacency_partition_col: str | None = None,
 ) -> DataFrame:
     """(unique_id, address_concat, postcode, ...) -> cleaned feature table.
 
-    ``use_broadcast_tf=True`` (default) uses the shuffle-free Arrow UDF TF
-    attachment; False uses the join-based formulation (bit-identical
-    results, used for plan comparisons and oracle checks).
+    TF attachment is the shuffle-free broadcast Arrow UDF
+    (steps.add_term_frequencies_broadcast).
     ``derive_adjacency`` enables the optional distinguishing-start-tokens
     feature (reference QUEUE_PRE_TF_WITH_UNIQUE_AND_COMMON,
     cleaning_pipelines.py:52-57; default off there too).
@@ -99,10 +97,7 @@ def clean_addresses(
         df = run_queue(df, QUEUE_PRE_TF[cut:])
     else:
         df = run_queue(df, QUEUE_PRE_TF)
-    if use_broadcast_tf:
-        df = S.add_term_frequencies_broadcast(df, rel_tok_freq)
-    else:
-        df = S.add_term_frequencies(df, rel_tok_freq)
+    df = S.add_term_frequencies_broadcast(df, rel_tok_freq)
     df = S.move_common_end_tokens_to_field(df, common_end_tokens)
     return run_queue(df, QUEUE_POST_TF)
 

@@ -44,30 +44,11 @@ def let(value: Column, body) -> Column:
     return F.try_element_at(F.transform(F.array(value), body), F.lit(1))
 
 
-def pin(value: Column, seed: int) -> Column:
-    """Identity wrapper that stops Catalyst re-evaluating ``value`` once
-    per consumer.
-
-    ``let`` binds within ONE expression; across expressions, CollapseProject
-    and PushDownPredicate inline a column's defining expression into every
-    consumer — including into HOF lambdas, where it then re-evaluates per
-    element. Embedding a seeded ``rand`` (value-neutral: the index is
-    always 1) flags the expression nondeterministic, which those rules
-    refuse to touch, so the column materialises once per row and consumers
-    reference it. Works for any column type, including maps and arrays.
-    Use only on expensive multi-consumer columns: it also blocks filter
-    pushdown through the projection.
-    """
-    idx = (F.lit(1.0) + F.lit(0.0) * F.rand(seed)).cast("int")
-    return F.try_element_at(F.array(value), idx)
-
-
 # ---------------------------------------------------------------------------
 # String-level regex battery (reference: cleaning/regexes.py).
-# Each helper has a Column form (unit-testable, composable) and an
-# `*_sql` string form; the step functions emit SQL text because building
-# these trees through Py4J costs milliseconds PER OPERATOR (sqlexpr
-# module doc) and the cleaning queue is rebuilt per linkage call.
+# Each helper emits SQL text: building these trees through Py4J costs
+# milliseconds PER OPERATOR (sqlexpr module doc) and the cleaning queue is
+# rebuilt per linkage call.
 # ---------------------------------------------------------------------------
 
 
@@ -75,32 +56,16 @@ def _rr(c: str, pattern: str, replacement: str) -> str:
     return f"regexp_replace({c}, {X.q(pattern)}, {X.q(replacement)})"
 
 
-def remove_commas_periods(c: Column) -> Column:
-    return F.regexp_replace(c, r"[,.]", " ")
-
-
 def remove_commas_periods_sql(c: str) -> str:
     return _rr(c, r"[,.]", " ")
-
-
-def remove_apostrophes(c: Column) -> Column:
-    return F.regexp_replace(c, r"'", "")
 
 
 def remove_apostrophes_sql(c: str) -> str:
     return _rr(c, r"'", "")
 
 
-def remove_multiple_spaces(c: Column) -> Column:
-    return F.regexp_replace(c, r"\s+", " ")
-
-
 def remove_multiple_spaces_sql(c: str) -> str:
     return _rr(c, r"\s+", " ")
-
-
-def replace_fwd_slash_with_dash(c: Column) -> Column:
-    return F.regexp_replace(c, r"/", "-")
 
 
 def replace_fwd_slash_with_dash_sql(c: str) -> str:
@@ -110,49 +75,29 @@ def replace_fwd_slash_with_dash_sql(c: str) -> str:
 NUM_DASH_NUM_RE = r"(?<![A-Za-z])(\d+[A-Za-z]?)\s*-\s*(\d+[A-Za-z]?)(?![A-Za-z])"
 
 
-def standarise_num_dash_num(c: Column) -> Column:
-    # '23A - 24' -> '23A-24' (regexes.py:16-39; intent active here, see module doc)
-    return F.regexp_replace(c, NUM_DASH_NUM_RE, r"$1-$2")
-
-
 def standarise_num_dash_num_sql(c: str) -> str:
+    # '23A - 24' -> '23A-24' (regexes.py:16-39; intent active here, see module doc)
     return _rr(c, NUM_DASH_NUM_RE, r"$1-$2")
 
 
-def separate_letter_num(c: Column) -> Column:
-    # 'C230' -> 'C 230' (regexes.py:106-129)
-    return F.regexp_replace(c, r"\b([A-Za-z])\s*(\d+)\b", r"$1 $2")
-
-
 def separate_letter_num_sql(c: str) -> str:
+    # 'C230' -> 'C 230' (regexes.py:106-129)
     return _rr(c, r"\b([A-Za-z])\s*(\d+)\b", r"$1 $2")
 
 
-def standarise_num_letter(c: Column) -> Column:
-    # '123-A ' -> '123A ' (regexes.py:78-103; [[:punct:]] -> \p{Punct})
-    return F.regexp_replace(c, r"(\d{1,4})[\p{Punct}\s]([A-Za-z])\s", r"$1$2 ")
-
-
 def standarise_num_letter_sql(c: str) -> str:
+    # '123-A ' -> '123A ' (regexes.py:78-103; [[:punct:]] -> \p{Punct})
     return _rr(c, r"(\d{1,4})[\p{Punct}\s]([A-Za-z])\s", r"$1$2 ")
 
 
-def move_flat_to_front(c: Column) -> Column:
+def move_flat_to_front_sql(c: str) -> str:
     # regexes.py:132-153 — despite its name this only rewrites the matched
     # suffix in place ('\1 \2'), normalising whitespace after 'FLAT n'
-    return F.regexp_replace(c, r"\b(FLAT \d+[A-Z]?)\s+(.*)", r"$1 $2")
-
-
-def move_flat_to_front_sql(c: str) -> str:
     return _rr(c, r"\b(FLAT \d+[A-Z]?)\s+(.*)", r"$1 $2")
 
 
-def remove_repeated_tokens(c: Column) -> Column:
-    # 'word word' -> 'word' (regexes.py:48-71; intent active here)
-    return F.regexp_replace(c, r"\b(\w{4,})\s+\1\b", r"$1")
-
-
 def remove_repeated_tokens_sql(c: str) -> str:
+    # 'word word' -> 'word' (regexes.py:48-71; intent active here)
     return _rr(c, r"\b(\w{4,})\s+\1\b", r"$1")
 
 
@@ -358,8 +303,9 @@ def add_term_frequencies(df: DataFrame, rel_tok_freq: DataFrame) -> DataFrame:
 
     Join-based formulation: posexplode -> broadcast left join on token ->
     re-assemble with array_sort(collect_list(struct(pos,...))) (collect_list
-    alone is unordered). One shuffle on unique_id. For the shuffle-free
-    scale path see :func:`add_term_frequencies_broadcast`.
+    alone is unordered). One shuffle on unique_id. Not on the pipeline
+    path: it is the reference the tests hold the pipeline's shuffle-free
+    :func:`add_term_frequencies_broadcast` to.
     """
     exploded = df.select(
         "unique_id",
@@ -497,18 +443,8 @@ def use_first_unusual_token_if_no_numeric_token(df: DataFrame) -> DataFrame:
     )
 
 
-def _sorted_by_freq(arr: Column) -> Column:
-    # stable sort by rel_freq (DuckDB list_grade_up), tie-broken by position
-    keyed = F.transform(
-        arr,
-        lambda x, i: F.struct(
-            x["rel_freq"].alias("rel_freq"), i.alias("pos"), x["tok"].alias("tok")
-        ),
-    )
-    return F.array_sort(keyed)
-
-
 def _sorted_by_freq_sql(arr: str) -> str:
+    # stable sort by rel_freq (DuckDB list_grade_up), tie-broken by position
     x, i = X.gensym("x"), X.gensym("i")
     return (
         f"array_sort(transform({arr}, ({x}, {i}) -> named_struct("
@@ -550,38 +486,18 @@ def separate_unusual_tokens(df: DataFrame) -> DataFrame:
     ).drop("__bands")
 
 
-def _histogram_arr(arr: Column) -> Column:
+def _histogram_arr_sql(arr: str) -> str:
     """array<struct<tok,rel_freq>> -> tok-sorted array<struct<tok,cnt,rel_freq>>.
 
     Carries the same information as the reference's MAP(STRUCT, UBIGINT)
     histogram (SURVEY §1.2: tok uniquely determines rel_freq per record),
     but as a SORTED ARRAY rather than a map: Tungsten encodes arrays far
     more cheaply than maps in both shuffle rows and parquet pages, and the
-    scoring intersection becomes a linear merge over the two sorted sides
-    instead of per-entry map probes (scoring.hist_intersection_product).
-    NULL (not an empty array) when the source array is empty — matching
-    DuckDB list_aggregate(_, 'histogram').
+    scoring intersection probes short arrays instead of per-entry map
+    lookups (scoring._hist_prod_parallel_sql). NULL (not an empty array)
+    when the source array is empty — matching DuckDB
+    list_aggregate(_, 'histogram').
     """
-    def hist(a: Column) -> Column:
-        h = F.array_sort(
-            F.transform(
-                F.array_distinct(a),
-                lambda s: F.struct(
-                    s["tok"].alias("tok"),
-                    F.size(F.filter(a, lambda y: y["tok"] == s["tok"]))
-                    .cast("long")
-                    .alias("cnt"),
-                    s["rel_freq"].alias("rel_freq"),
-                ),
-            )
-        )
-        return F.when(F.size(a) > 0, h)
-
-    return let(arr, hist)
-
-
-def _histogram_arr_sql(arr: str) -> str:
-    """SQL-text twin of :func:`_histogram_arr` (same tree, one parse)."""
 
     def hist(a: str) -> str:
         s, y = X.gensym("s"), X.gensym("y")

@@ -1,7 +1,10 @@
 """Transitive clustering: connected components over scored match pairs.
 
 Not present in the reference (it selects one best match per messy record);
-added per the north rule. Algorithm: iterative min-label propagation — the
+added per the north rule. The linkage path is bipartite_components (via
+cluster_predictions); connected_components below has no production caller
+and is kept as the general-graph reference the bipartite path is
+parity-tested against. Its algorithm: iterative min-label propagation — the
 DataFrame formulation of Kiveris et al., "Connected Components in MapReduce
 and Beyond" (the simple variant; alternating large-star/small-star is noted
 below for graphs with large diameter).
@@ -18,17 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def edges_from_predictions(
-    df_predict: DataFrame, threshold_match_weight: float
-) -> DataFrame:
-    """(src, dst) edges from scored pairs above the threshold."""
-    return (
-        df_predict.filter(F.col("match_weight") >= threshold_match_weight)
-        .select(F.col("unique_id_l").alias("src"), F.col("unique_id_r").alias("dst"))
-        .dropDuplicates()
-    )
 
 
 def connected_components(
@@ -200,6 +192,8 @@ def bipartite_components(
     rows = probe.collect()
     bad = [r for r in rows if r["kind"] == "overlap"]
     if bad:
+        e0.unpersist()
+        m_min.unpersist()
         raise ValueError(
             "cluster_predictions: id value(s) appear on BOTH sides of "
             f"the pairs (e.g. {[r['c'] for r in bad]}); canonical "

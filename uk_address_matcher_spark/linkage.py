@@ -146,11 +146,9 @@ def build_side_tables(
                 f"{max_side_rows:,} rows — pre-aggregate or filter it "
                 "before passing, or raise max_side_rows explicitly."
             )
-        # the scoring kernel's branch-and-bound early exit derives its
-        # histogram-BF bounds from "every rel_freq factor <= 1" (a
-        # frequency SHARE by definition; the on-the-fly path above is a
-        # share by construction) — refuse loudly rather than prune
-        # unsoundly if a caller passes raw counts
+        # rel_freq is a frequency SHARE by definition (the on-the-fly
+        # path above is a share by construction); raw counts would
+        # silently skew every histogram BF — refuse loudly instead
         bad = [r for r in tf_rows if r[1] is not None and r[1] > 1.0]
         if bad:
             raise ValueError(
@@ -274,11 +272,9 @@ def link_cleaned(
     # score in COMPACT form (no display strings through the pair
     # exchanges); when the second pass follows, the prune to exactly its
     # candidate set (threshold -20 + top-5 per messy record) is FUSED
-    # into score_pairs, whose branch-and-bound early exit then skips the
-    # expensive histogram product for every pair provably outside that
-    # cut — at the default thresholds that is the large majority of
-    # blocked pairs — and nothing below the cut reaches the re-attach
-    # joins or the pass-1 checkpoint
+    # into score_pairs, so only (ids, weight) cross the top-n window's
+    # exchange and nothing below the cut reaches the re-attach joins or
+    # the pass-1 checkpoint
     pred = score_pairs(
         pairs,
         cl,

@@ -49,8 +49,8 @@ def hist_intersection_product(hl: Column, hr: Column) -> Column:
     Reference: array_reduce_by_freq, training.py:323-357.
 
     Histograms are ``array<struct<tok,cnt,rel_freq>>`` with distinct toks
-    per side (steps._histogram_arr): one aggregate over the left side with
-    a filter-probe into the right. Address histograms are short (<~15
+    per side (steps._histogram_arr_sql): one aggregate over the left side
+    with a filter-probe into the right. Address histograms are short (<~15
     entries), so the O(n_l * n_r) probe beats both the previous map
     encoding (Spark map lookups are O(n) scans over UnsafeMapData, and map
     columns are the expensive payload in every shuffle/encode) and a
@@ -89,20 +89,6 @@ def _cascade(levels: list[tuple[Column, Column]]) -> Column:
     return expr.otherwise(levels[-1][1])
 
 
-def _hist_prod_sql(hl: str, hr: str) -> str:
-    """SQL-text form of :func:`hist_intersection_product` — identical
-    expression tree (probe with filter + try_element_at, pow of
-    rel_freq), built as a string so constructing the kernel costs one
-    Py4J round-trip instead of thousands (see sqlexpr module doc)."""
-    acc, e, y = X.gensym("acc"), X.gensym("e"), X.gensym("y")
-    hit = f"try_element_at(filter({hr}, {y} -> {y}.tok = {e}.tok), 1)"
-    body = (
-        f"coalesce(CASE WHEN {hit} IS NOT NULL THEN "
-        f"pow({e}.rel_freq, cast(least({e}.cnt, {hit}.cnt) as double)) END, 1.0D)"
-    )
-    return f"aggregate({hl}, 1.0D, ({acc}, {e}) -> {acc} * {body})"
-
-
 def _hist_prod_parallel_sql(prefix: str) -> str:
     """Intersection product over the PARALLEL-ARRAY histogram encoding
     (see score_pairs._compact): per side ``{prefix}_tok`` array<bigint>
@@ -112,8 +98,8 @@ def _hist_prod_parallel_sql(prefix: str) -> str:
     order), exactly like :func:`hist_intersection_product`, so the right
     side never ships its rel_freq array at all.
 
-    vs the struct probe (_hist_prod_sql): array_position over a dense
-    primitive long array SHORT-CIRCUITS at the first hit where
+    vs the struct probe (hist_intersection_product): array_position over
+    a dense primitive long array SHORT-CIRCUITS at the first hit where
     filter(...) materialises the whole filtered struct array, and the
     per-entry struct headers disappear from the pair-attach exchange.
     Multiplication order is the left entry order either way, so the
@@ -161,8 +147,7 @@ def _tf_mult_sql(u_level: float, tf_weight: float, tf_l: str, tf_r: str) -> str:
 def _bucket_sql(prod: str) -> str:
     """The 34-level product-threshold ladder as SQL over an arbitrary
     (already-bound) product expression. Non-increasing in ``prod``:
-    smaller products hit earlier (higher-weight) levels — the bound
-    derivation in score_pairs relies on this monotonicity."""
+    smaller products hit earlier (higher-weight) levels."""
     return X.cascade(
         [
             (f"{prod} < {X.d(10.0 ** exp)}", X.d(_w2bf(weight)))
@@ -173,45 +158,13 @@ def _bucket_sql(prod: str) -> str:
 
 
 @X.scoped
-def comparison_bf_sqls(
-    oac_sig: bool = False,
-    precomputed_digits: bool = False,
-    parallel_hists: bool = False,
-    precomputed_pc_parts: bool = False,
-) -> dict[str, str]:
-    """All 8 comparison BF expressions as SQL text over a suffixed pair
-    row (cols *_l/*_r plus tf_numeric_token_{1,2,3}_{l,r}).
-
-    ``oac_sig=True``: comparison 1 reads the null-preserving xxhash64
-    signature columns ``__oac_sig_l/_r`` instead of the address strings —
-    the equality-only comparison doesn't need the text, and dropping the
-    two longest strings from the pair shuffle is a large payload win
-    (score_pairs re-attaches the text after the threshold filter).
-
-    ``precomputed_digits=True``: numeric_token_1 level 3 compares the
-    per-RECORD ``__nt1_dg_l/_r`` columns (score_pairs._compact extracts
-    the digit run once per record) instead of running regexp_extract per
-    PAIR — the values are identical by construction, the regex runs n
-    times instead of n_pairs times.
-
-    ``parallel_hists=True``: comparisons 6 and 7 read the parallel-array
-    histogram encoding (``__th_*``/``__ch_*`` columns, see
-    score_pairs._compact and _hist_prod_parallel_sql) instead of the
-    array-of-struct histograms — same values, same product order,
-    bit-identical BFs.
-
-    ``precomputed_pc_parts=True``: comparison 8 levels 5-6 compare the
-    per-RECORD ``__pc_area_l/_r`` / ``__pc_in_l/_r`` columns
-    (score_pairs._compact runs split_part once per record) instead of
-    split_part per PAIR. This matters far beyond expression count:
-    Spark's split_part (StringSplitSQL) routes through
-    UTF8String.split -> String.split, which COMPILES A java.util.regex
-    Pattern on every call — JFR-profiled at ~25% of the whole scoring
-    stage's CPU when the four split_part calls sat on the pair path
-    (evaluated for every pair whose postcode equality/levenshtein
-    levels miss, i.e. most of them). Values are identical by
-    construction (same split_part over the same postcode string,
-    including its ''-on-missing-part and NULL-propagation behaviour).
+def comparison_bf_sqls() -> dict[str, str]:
+    """All 8 comparison BF expressions as SQL text over a suffixed pair of
+    COMPACT rows (see _compact): cols *_l/*_r, the per-record columns
+    ``__oac_sig``, ``__nt1_dg``, ``__th_*``/``__ch_*`` and
+    ``__pc_area``/``__pc_in``, plus tf_numeric_token_{1,2,3}_{l,r}.
+    Values equal :func:`_comparison_bfs_column_api` over the uncompacted
+    rows (parity-tested).
 
     Why strings: the Column API costs one Py4J round-trip per operator
     node; this kernel has thousands. One ``F.expr`` per comparison
@@ -219,17 +172,11 @@ def comparison_bf_sqls(
     are Python-computed and embedded with exact round-trip repr, so the
     values are bit-identical to the former ``F.lit`` forms).
     """
-    oac_l, oac_r = (
-        ("__oac_sig_l", "__oac_sig_r")
-        if oac_sig
-        else ("original_address_concat_l", "original_address_concat_r")
-    )
-
     # 1. original_address_concat — cl.ExactMatch u=[1,2] m=[15,1] (training.py:14-16)
     oac = X.cascade(
         [
-            (f"({oac_l} IS NULL OR {oac_r} IS NULL)", "1.0D"),
-            (f"{oac_l} = {oac_r}", X.d(15.0)),
+            ("(__oac_sig_l IS NULL OR __oac_sig_r IS NULL)", "1.0D"),
+            ("__oac_sig_l = __oac_sig_r", X.d(15.0)),
             (None, X.d(1 / 2)),
         ]
     )
@@ -261,23 +208,12 @@ def comparison_bf_sqls(
     )
 
     # 3. numeric_token_1 (training.py:160-219)
-    def digits(col: str) -> str:
-        return f"nullif(regexp_extract({col}, '\\\\d+', 0), '')"
-
     tf1 = _tf_mult_sql(1.0, 0.1, "tf_numeric_token_1_l", "tf_numeric_token_1_r")
-    dg_l, dg_r = (
-        ("__nt1_dg_l", "__nt1_dg_r")
-        if precomputed_digits
-        else (digits("numeric_token_1_l"), digits("numeric_token_1_r"))
-    )
     n1 = X.cascade(
         [
             ("(numeric_token_1_l IS NULL OR numeric_token_1_r IS NULL)", "1.0D"),
             ("numeric_token_1_l = numeric_token_1_r", f"{X.d(_w2bf(6.57))} * {tf1}"),
-            (
-                f"{dg_l} = {dg_r}",
-                f"{X.d(_w2bf(6.57))} * {tf1}",
-            ),
+            ("__nt1_dg_l = __nt1_dg_r", f"{X.d(_w2bf(6.57))} * {tf1}"),
             (
                 "(numeric_token_2_l = numeric_token_1_r "
                 "OR numeric_token_1_l = numeric_token_2_r)",
@@ -321,26 +257,10 @@ def comparison_bf_sqls(
     # 6. token_rel_freq_arr_hist — 34 product-threshold levels
     #    (training.py:386-455); product computed once (let-bound),
     #    bucketed by the when ladder
-    if parallel_hists:
-        th_null = "(__th_tok_l IS NULL OR __th_tok_r IS NULL)"
-        th_prod = _hist_prod_parallel_sql("__th")
-        ch_null = "(__ch_tok_l IS NULL OR __ch_tok_r IS NULL)"
-        ch_prod = _hist_prod_parallel_sql("__ch")
-    else:
-        th_null = (
-            "(token_rel_freq_arr_hist_l IS NULL "
-            "OR token_rel_freq_arr_hist_r IS NULL)"
-        )
-        th_prod = _hist_prod_sql(
-            "token_rel_freq_arr_hist_l", "token_rel_freq_arr_hist_r"
-        )
-        ch_null = (
-            "(common_end_tokens_hist_l IS NULL "
-            "OR common_end_tokens_hist_r IS NULL)"
-        )
-        ch_prod = _hist_prod_sql(
-            "common_end_tokens_hist_l", "common_end_tokens_hist_r"
-        )
+    th_null = "(__th_tok_l IS NULL OR __th_tok_r IS NULL)"
+    th_prod = _hist_prod_parallel_sql("__th")
+    ch_null = "(__ch_tok_l IS NULL OR __ch_tok_r IS NULL)"
+    ch_prod = _hist_prod_parallel_sql("__ch")
     tok_hist = X.cascade(
         [
             (th_null, "1.0D"),
@@ -358,22 +278,14 @@ def comparison_bf_sqls(
     )
 
     # 8. postcode (training.py:489-546)
-    if precomputed_pc_parts:
-        area_l, area_r = "__pc_area_l", "__pc_area_r"
-        in_l, in_r = "__pc_in_l", "__pc_in_r"
-    else:
-        area_l = "split_part(postcode_l, ' ', 1)"
-        area_r = "split_part(postcode_r, ' ', 1)"
-        in_l = "split_part(postcode_l, ' ', 2)"
-        in_r = "split_part(postcode_r, ' ', 2)"
     pc = X.cascade(
         [
             ("(postcode_l IS NULL AND postcode_r IS NULL)", "1.0D"),
             ("postcode_l = postcode_r", X.d(3e6)),
             ("levenshtein(postcode_l, postcode_r) <= 1", X.d(10000.0)),
             ("levenshtein(postcode_l, postcode_r) <= 2", X.d(5000.0)),
-            (f"{area_l} = {area_r}", X.d(3000.0)),
-            (f"{in_l} = {in_r}", X.d(2000.0)),
+            ("__pc_area_l = __pc_area_r", X.d(3000.0)),
+            ("__pc_in_l = __pc_in_r", X.d(2000.0)),
             (None, X.d(1 / 64)),
         ]
     )
@@ -390,26 +302,17 @@ def comparison_bf_sqls(
     }
 
 
-def comparison_bfs(retain_product: bool = False, oac_sig: bool = False) -> dict[str, Column]:
-    """All 8 comparison BF columns (Column form of
-    :func:`comparison_bf_sqls` — one ``F.expr`` per comparison)."""
-    return {name: F.expr(sql) for name, sql in comparison_bf_sqls(oac_sig).items()}
-
-
-def _comparison_bfs_column_api(oac_sig: bool = False) -> dict[str, Column]:
-    """Former Column-API kernel builder, kept verbatim for the
-    construction-parity test (tests assert the SQL-text kernel and this
-    one produce identical values); not used on the hot path — building
-    it costs ~3s of Py4J round-trips.
+def _comparison_bfs_column_api() -> dict[str, Column]:
+    """Column-API reference kernel over UNCOMPACTED suffixed pair rows
+    (text, struct histograms, raw postcodes): the parity test asserts the
+    production kernel (score_pairs over comparison_bf_sqls) emits the same
+    BFs; not used on the hot path — building it costs ~3s of Py4J
+    round-trips.
     """
     c = F.col
 
     # 1. original_address_concat — cl.ExactMatch u=[1,2] m=[15,1] (training.py:14-16)
-    oac_l, oac_r = (
-        ("__oac_sig_l", "__oac_sig_r")
-        if oac_sig
-        else ("original_address_concat_l", "original_address_concat_r")
-    )
+    oac_l, oac_r = "original_address_concat_l", "original_address_concat_r"
     oac = _cascade(
         [
             (c(oac_l).isNull() | c(oac_r).isNull(), F.lit(1.0)),
@@ -622,23 +525,7 @@ def _sides_broadcastable(cleaned_l: DataFrame, cleaned_r: DataFrame) -> bool:
     return cleaned_l.count() <= cap and cleaned_r.count() <= cap
 
 
-def _prod_all_sql(hist: str) -> str:
-    # product over ALL of one side's histogram entries of
-    # rel_freq^cnt — a LOWER bound on the pairwise intersection
-    # product (intersection ⊆ side, min(cnt_l,cnt_r) <= cnt_side,
-    # every factor <= 1), hence bucketed it upper-bounds the
-    # histogram BF per pair WITHOUT touching the per-pair product.
-    # Computed once per RECORD here (n rows), not per pair.
-    a, e = X.gensym("a"), X.gensym("e")
-    return (
-        f"aggregate({hist}, 1.0D, ({a}, {e}) -> "
-        f"{a} * pow({e}.rel_freq, cast({e}.cnt as double)))"
-    )
-
-
-def _compact(
-    df: DataFrame, keep: list[str], rf: bool = True, with_bounds: bool = False
-) -> DataFrame:
+def _compact(df: DataFrame, keep: list[str], rf: bool = True) -> DataFrame:
     """COMPACT one side's pair-shuffle payload. Every candidate pair (23M
     at 250k docs) carries both sides' comparison inputs through two
     exchanges, but only the ~5% surviving the threshold need display
@@ -659,22 +546,18 @@ def _compact(
      - original_address_concat: replaced by a null-preserving xxhash64
        signature (__oac_sig); its BF is equality-only. Text re-attached
        post-filter.
+     - per-record precomputes the kernel compares instead of evaluating
+       per PAIR (__nt1_dg, __pc_area/__pc_in; see the comments below).
 
-    ``with_bounds`` (the two-stage kernel only) additionally computes the
-    per-record full-histogram products feeding the B&B weight bounds —
-    the default path must not pay 16 bytes/pair for them through the
-    bandwidth-bound pair-attach exchange. ``rf=False`` (the right/messy
-    side): the product only ever reads the LEFT side's rel_freq, so the
-    right side doesn't ship one."""
+    ``rf=False`` (the right/messy side): the product only ever reads the
+    LEFT side's rel_freq, so the right side doesn't ship one."""
     out = df.select(keep)
-    for hist, pref, pa in (
-        ("token_rel_freq_arr_hist", "__th", "__hist_pa"),
-        ("common_end_tokens_hist", "__ch", "__cet_pa"),
+    for hist, pref in (
+        ("token_rel_freq_arr_hist", "__th"),
+        ("common_end_tokens_hist", "__ch"),
     ):
         if hist not in out.columns:
             continue
-        if with_bounds:
-            out = out.withColumn(pa, F.expr(_prod_all_sql(hist)))
         e1, e2, e3 = X.gensym("e"), X.gensym("e"), X.gensym("e")
         out = out.withColumn(
             f"{pref}_tok", F.expr(f"transform({hist}, {e1} -> xxhash64({e1}.tok))")
@@ -689,16 +572,22 @@ def _compact(
         out = out.drop(hist)
     if "numeric_token_1" in out.columns:
         # digit run extracted once per record; the n1 cascade's level 3
-        # compares these instead of regexp_extract-ing per pair
+        # compares these instead of regexp_extract-ing per pair — the
+        # values are identical by construction, the regex runs n times
+        # instead of n_pairs times
         out = out.withColumn(
             "__nt1_dg",
             F.expr("nullif(regexp_extract(numeric_token_1, '\\\\d+', 0), '')"),
         )
     if "postcode" in out.columns:
-        # postcode area/incode split once per record: split_part on the
-        # pair path compiles a java.util.regex Pattern per CALL (see
-        # comparison_bf_sqls precomputed_pc_parts) — measured ~25% of
-        # scoring-stage CPU before this
+        # postcode area/incode split once per record for the postcode
+        # cascade's levels 5-6. Spark's split_part (StringSplitSQL) routes
+        # through UTF8String.split -> String.split, which COMPILES A
+        # java.util.regex Pattern on every call — JFR-profiled at ~25% of
+        # the scoring stage's CPU when the four calls sat on the pair path
+        # (evaluated for every pair whose equality/levenshtein levels
+        # miss, i.e. most of them). Same values, including split_part's
+        # ''-on-missing-part and NULL propagation.
         out = out.withColumn(
             "__pc_area", F.expr("split_part(postcode, ' ', 1)")
         ).withColumn("__pc_in", F.expr("split_part(postcode, ' ', 2)"))
@@ -737,62 +626,15 @@ def score_pairs(
     retain_matching_columns: bool = True,
     attach_display: bool = True,
     prune_top_n: tuple[float, int] | None = None,
-    early_exit: bool = False,
-    debug_stage_counts: dict | None = None,
 ) -> DataFrame:
     """(unique_id_l, unique_id_r) pairs -> scored prediction table.
 
     ``prune_top_n=(thr, n)``: the output is EXACTLY
     ``prune_candidates(full_output, thr, n)`` — weight > thr and rank <= n
     per messy record by (weight DESC, unique_id_l DESC) — fused here so
-    the kernel can skip unreachable pairs (see early_exit).
-
-    ``early_exit``: two-stage branch-and-bound kernel — implemented,
-    equivalence-tested, and measured; DEFAULT OFF as a data-driven
-    decision. On the grid corpus the bound filter removes nothing
-    (every blocked pair's upper bound clears -20: blocked pairs share
-    street tokens, so bucket(prodall) is within a few bits of the true
-    histogram BF for exactly the pairs that matter) and the rank bound
-    removes only ~17%, while the bound columns + extra per-group sort
-    cost ~15% wall (sf0.1 A/B, min-of-2 per variant across interleaved
-    processes: single-stage 35.1s vs two-stage 41.0s, identical 245,821
-    predictions — tools/ab_link.py, BENCH/BASELINE.md round 5). Round 6
-    tested the hypothesized junk-heavy activation corpus (postcode-skewed:
-    50% of rows in 50 postcodes, 6.1M blocked pairs of which most are
-    cross-street junk — tools/bnb_probe.py, BENCH/r06_bnb_probe.json):
-    the rank bound there removes 68.3% of pairs before stage 2, yet the
-    interleaved A/B still loses 5% (single 41.9 s vs bnb 44.3 s min,
-    identical 147,915 predictions — BENCH/r06_ab_skew.json), because the
-    rank bound's per-group window sort costs as much as the histogram
-    products it skips. DECISION RULE: enable early_exit only when
-    tools/bnb_probe.py shows ub_cut_pct is large (>~40%) — i.e. the
-    CHEAP comparisons alone prove many pairs sub-threshold; a large
-    rank-cut alone (68% measured) does NOT pay. No measured corpus
-    reaches that, so the default stays single-stage. Mechanism when on: stage 1 computes the six
-    CHEAP scalar comparisons (equality/levenshtein on short strings) plus
-    sound per-pair bounds on the total weight; the expensive
-    token-histogram intersection product (the 34-level ladder, measured
-    ~60% of pass-1 CPU) and the common-end product run in stage 2 ONLY
-    for pairs whose upper bound clears the threshold and — under
-    prune_top_n — the 5th-best lower bound of their messy record's
-    candidate group. Bound construction:
-     - histogram BF upper bound: bucket(max(prodall_l, prodall_r)) where
-       prodall is each side's full product (precomputed per record in
-       _compact) — a lower bound on the intersection product since every
-       factor is <= 1 (requires rel_freq <= 1, validated at side-table
-       build); lower bound: bucket(1.0) = 2^-1 (intersection product
-       <= 1.0 always).
-     - common-end BF: EXACT in stage 1 when either side is null (1.0) or
-       when max(prodall) >= 1e-2 (the product can only be >= that, so
-       the <1e-2 level can't fire -> 1/1.5); else bounded [1/1.5, 4.0].
-     - bounds are padded by ±1e-9 against float-summation-order drift.
-    A pair is dropped only when provably outside the output: upper bound
-    <= threshold, or >= n pairs in its group have lower bounds strictly
-    above its upper bound (those n then outrank it at ANY tie-break).
-    Surviving pairs get their weight from the FULL kernel with terms
-    summed in the exact original order, so every emitted weight is
-    bit-identical to the single-stage kernel (equivalence-tested).
-    ``early_exit=False`` (the default) runs the single-stage kernel.
+    only (ids, weight) cross the top-n window's exchange. A two-stage
+    branch-and-bound kernel was measured and removed; OPTIMIZATION_r06.md
+    §4 records why and when it would pay.
 
     ``attach_display=False`` returns the COMPACT scored rows (ids,
     weights, postcodes, numeric/flat tokens, packed histograms, __oac_sig
@@ -811,10 +653,10 @@ def score_pairs(
     weights, the address/postcode pair, and common_end_tokens_hist_r (the
     second pass's inputs). Text/histogram columns in the output are
     re-attached from the cleaned tables AFTER the threshold filter — the
-    pair exchanges carry only compact signatures (see _compact below). Materialising the full frame costs real time —
-    the token-histogram maps dominate the parquet encode of a pass-1
-    checkpoint — so drop them when only the second pass consumes the
-    output.
+    pair exchanges carry only compact signatures (see _compact).
+    Materialising the full frame costs real time — the token-histogram
+    maps dominate the parquet encode of a pass-1 checkpoint — so drop them
+    when only the second pass consumes the output.
     """
     # slim payload: blocking-key arrays (unusual_* bands) are not used by
     # scoring or the second pass — dropping them shrinks the pair-attach
@@ -834,10 +676,8 @@ def score_pairs(
     keep_l = [c for c in cleaned_l.columns if c in scoring_cols]
     keep_r = [c for c in cleaned_r.columns if c in scoring_cols]
 
-    left = _suffix(_compact(cleaned_l, keep_l, with_bounds=early_exit), "_l")
-    right = _suffix(
-        _compact(cleaned_r, keep_r, rf=False, with_bounds=early_exit), "_r"
-    )
+    left = _suffix(_compact(cleaned_l, keep_l), "_l")
+    right = _suffix(_compact(cleaned_r, keep_r, rf=False), "_r")
     bcast_sides = _sides_broadcastable(cleaned_l, cleaned_r)
     if bcast_sides:
         # BROADCAST the compact sides: the two-key attach otherwise
@@ -870,21 +710,28 @@ def score_pairs(
             df = df.withColumn(f"tf_numeric_token_{k}_l", F.lit(None).cast("double"))
             df = df.withColumn(f"tf_numeric_token_{k}_r", F.lit(None).cast("double"))
 
-    bf_sqls = comparison_bf_sqls(
-        oac_sig=True, precomputed_digits=True, parallel_hists=True,
-        precomputed_pc_parts=True,
+    bf_sqls = comparison_bf_sqls()
+    df = df.withColumns({name: F.expr(sql) for name, sql in bf_sqls.items()})
+    log_sum = " + ".join(f"log2({name})" for name in bf_sqls)
+    # Pin the weight projection: CollapseProject + PushDownPredicate would
+    # otherwise inline the ENTIRE scoring expression tree into every
+    # downstream consumer — the threshold filter (which lands in the join
+    # condition), the match_weight output, and match_probability's two
+    # references — evaluating all 8 BF cascades 4x per pair (measured: 4
+    # copies of every comparison in the optimized plan). Adding
+    # ``0.0 * rand(seed)`` leaves the value bit-identical (0.0 * r is
+    # exactly 0.0 for r in [0,1)) but flags the column nondeterministic,
+    # which Catalyst refuses to collapse through or push filters below, so
+    # the kernel runs exactly once and consumers read the materialised
+    # column. (A boolean guard like ``rand() >= -1`` does NOT survive:
+    # Spark 4 folds out-of-range rand comparisons to literals.)
+    df = df.withColumn(
+        "match_weight",
+        F.expr(f"{X.d(PRIOR_LOG2_ODDS)} + {log_sum} + 0.0D * rand(7)"),
     )
     prune_thr, top_n = prune_top_n if prune_top_n is not None else (None, None)
     thr_parts = [t for t in (threshold_match_weight, prune_thr) if t is not None]
     thr_eff = max(thr_parts) if thr_parts else None
-    use_bnb = early_exit and thr_eff is not None
-
-    if use_bnb:
-        df = _two_stage_kernel(
-            df, bf_sqls, thr_eff, top_n, retain_bf, debug_stage_counts
-        )
-    else:
-        df = _single_stage_kernel(df, bf_sqls)
     prob_sql = "pow(2.0D, match_weight) / (1.0D + pow(2.0D, match_weight))"
     narrow_prune = top_n is not None and not retain_bf and not attach_display
     if not narrow_prune:
@@ -930,9 +777,7 @@ def score_pairs(
     if narrow_prune:
         df = df.withColumn("match_probability", F.expr(prob_sql))
     df = df.drop(
-        "__w_prefix", "__bf_pc", "__cet_known", "__ub", "__lb", "__lb_elig",
-        "__rn_lb", "__l5", "__hist_pa_l", "__hist_pa_r", "__cet_pa_l",
-        "__cet_pa_r", "__nt1_dg_l", "__nt1_dg_r",
+        "__nt1_dg_l", "__nt1_dg_r",
         "__pc_area_l", "__pc_area_r", "__pc_in_l", "__pc_in_r",
     )
     if not retain_bf:
@@ -943,166 +788,6 @@ def score_pairs(
             broadcast_sides=bcast_sides,
         )
     return df
-
-
-_CHEAP5 = [
-    "bf_original_address_concat",
-    "bf_flat_positional",
-    "bf_numeric_token_1",
-    "bf_numeric_token_2",
-    "bf_numeric_token_3",
-]
-
-
-def _single_stage_kernel(df: DataFrame, bf_sqls: dict[str, str]) -> DataFrame:
-    df = df.withColumns({name: F.expr(sql) for name, sql in bf_sqls.items()})
-
-    log_sum = " + ".join(f"log2({name})" for name in bf_sqls)
-    # Pin the weight projection: CollapseProject + PushDownPredicate would
-    # otherwise inline the ENTIRE scoring expression tree into every
-    # downstream consumer — the threshold filter (which lands in the join
-    # condition), the match_weight output, and match_probability's two
-    # references — evaluating all 8 BF cascades 4x per pair (measured: 4
-    # copies of every comparison in the optimized plan). Adding
-    # ``0.0 * rand(seed)`` leaves the value bit-identical (0.0 * r is
-    # exactly 0.0 for r in [0,1)) but flags the column nondeterministic,
-    # which Catalyst refuses to collapse through or push filters below, so
-    # the kernel runs exactly once and consumers read the materialised
-    # column. (A boolean guard like ``rand() >= -1`` does NOT survive:
-    # Spark 4 folds out-of-range rand comparisons to literals.)
-    return df.withColumn(
-        "match_weight",
-        F.expr(f"{X.d(PRIOR_LOG2_ODDS)} + {log_sum} + 0.0D * rand(7)"),
-    )
-
-
-def _two_stage_kernel(
-    df: DataFrame,
-    bf_sqls: dict[str, str],
-    thr_eff: float,
-    top_n: int | None,
-    retain_bf: bool,
-    debug_stage_counts: dict | None = None,
-) -> DataFrame:
-    """Branch-and-bound kernel: cheap comparisons + bounds, prune, then
-    the expensive histogram/common-end products on survivors only. See
-    score_pairs docstring for the bound derivation and soundness
-    argument. Every intermediate is pinned (see _single_stage_kernel's
-    comment on the 0.0*rand idiom) so each is computed exactly once per
-    pair however many downstream consumers reference it."""
-    # ---- stage 1: six cheap scalar comparisons + weight bounds ----
-    if retain_bf:
-        df = df.withColumns(
-            {n: F.expr(X.pin(bf_sqls[n], 30 + i)) for i, n in enumerate(_CHEAP5)}
-        )
-        prefix_terms = [f"log2({n})" for n in _CHEAP5]
-    else:
-        prefix_terms = [f"log2({bf_sqls[n]})" for n in _CHEAP5]
-    pc = "bf_postcode" if retain_bf else "__bf_pc"
-    df = df.withColumn(pc, F.expr(X.pin(bf_sqls["bf_postcode"], 36)))
-    # __w_prefix = prior + the first five log-BF terms in the ORIGINAL
-    # summation order, so the final weight (prefix + hist + cet + pc) is
-    # the bit-identical left-associated sum the single-stage kernel emits
-    df = df.withColumn(
-        "__w_prefix",
-        F.expr(X.pin(f"{X.d(PRIOR_LOG2_ODDS)} + " + " + ".join(prefix_terms), 37)),
-    )
-    df = df.withColumn(
-        "__cet_known",
-        F.expr(
-            X.pin(
-                "CASE WHEN __ch_tok_l IS NULL "
-                "OR __ch_tok_r IS NULL THEN 1.0D "
-                f"WHEN greatest(__cet_pa_l, __cet_pa_r) >= {X.d(1e-2)} "
-                f"THEN {X.d(1 / 1.5)} END",
-                38,
-            )
-        ),
-    )
-    hist_null = "__th_tok_l IS NULL OR __th_tok_r IS NULL"
-    hist_ub = (
-        f"CASE WHEN {hist_null} THEN 1.0D ELSE "
-        + X.let("greatest(__hist_pa_l, __hist_pa_r)", _bucket_sql)
-        + " END"
-    )
-    hist_lb = f"CASE WHEN {hist_null} THEN 1.0D ELSE 0.5D END"
-    eps = X.d(1e-9)
-    df = df.withColumn(
-        "__ub",
-        F.expr(
-            X.pin(
-                f"__w_prefix + log2({hist_ub}) "
-                f"+ log2(coalesce(__cet_known, 4.0D)) + log2({pc}) + {eps}",
-                39,
-            )
-        ),
-    )
-    if debug_stage_counts is not None:
-        # diagnostic only (extra jobs re-run the attach lineage): how much
-        # of the blocked-pair volume each early-exit stage removes
-        agg = df.agg(
-            F.count("*").alias("n_input"),
-            F.count(F.when(F.col("__ub") > thr_eff, 1)).alias("n_after_ub"),
-        ).collect()[0]
-        debug_stage_counts["n_input"] = agg["n_input"]
-        debug_stage_counts["n_after_ub"] = agg["n_after_ub"]
-    df = df.filter(F.col("__ub") > thr_eff)
-    if top_n is not None:
-        df = df.withColumn(
-            "__lb",
-            F.expr(
-                X.pin(
-                    f"__w_prefix + log2({hist_lb}) "
-                    f"+ log2(coalesce(__cet_known, {X.d(1 / 1.5)})) "
-                    f"+ log2({pc}) - {eps}",
-                    40,
-                )
-            ),
-        )
-        # only pairs that provably survive the threshold may outrank
-        df = df.withColumn(
-            "__lb_elig", F.expr(f"CASE WHEN __lb > {X.d(thr_eff)} THEN __lb END")
-        )
-        grp = Window.partitionBy("unique_id_r")
-        df = df.withColumn(
-            "__rn_lb",
-            F.row_number().over(grp.orderBy(F.desc_nulls_last("__lb_elig"))),
-        )
-        df = df.withColumn(
-            "__l5",
-            F.max(
-                F.when(
-                    (F.col("__rn_lb") == top_n) & F.col("__lb_elig").isNotNull(),
-                    F.col("__lb_elig"),
-                )
-            ).over(grp),
-        )
-        # drop only when >= top_n group members have lower bounds STRICTLY
-        # above this pair's upper bound (ties keep the pair — soundness)
-        df = df.filter(F.col("__l5").isNull() | (F.col("__ub") >= F.col("__l5")))
-        if debug_stage_counts is not None:
-            debug_stage_counts["n_after_rank"] = df.count()
-
-    # ---- stage 2: the expensive products, survivors only ----
-    cet_sql = (
-        "CASE WHEN __cet_known IS NOT NULL THEN __cet_known "
-        f"ELSE {bf_sqls['bf_common_end_tokens']} END"
-    )
-    hist_sql = bf_sqls["bf_token_rel_freq_arr_hist"]
-    if retain_bf:
-        df = df.withColumn(
-            "bf_token_rel_freq_arr_hist", F.expr(X.pin(hist_sql, 41))
-        ).withColumn("bf_common_end_tokens", F.expr(X.pin(cet_sql, 42)))
-        hist_term, cet_term = "bf_token_rel_freq_arr_hist", "bf_common_end_tokens"
-    else:
-        hist_term, cet_term = hist_sql, cet_sql
-    return df.withColumn(
-        "match_weight",
-        F.expr(
-            f"__w_prefix + log2({hist_term}) + log2({cet_term}) "
-            f"+ log2({pc}) + 0.0D * rand(7)"
-        ),
-    )
 
 
 def attach_display_columns(

@@ -34,8 +34,7 @@ from uk_address_matcher_spark import sqlexpr as X
 
 # pass-1 -> pass-2 candidate cut (reference
 # identify_distinguishing_tokens.py:8-9); linkage fuses this prune into
-# score_pairs (branch-and-bound early exit), so the constants live here
-# once
+# score_pairs (prune_top_n), so the constants live here once
 PRUNE_MATCH_WEIGHT_THRESHOLD = -20.0
 PRUNE_TOP_N = 5
 

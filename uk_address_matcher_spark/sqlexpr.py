@@ -6,9 +6,7 @@ at ~3-4 ms each), so the scoring kernel / blocking rules / second-pass
 algebra — thousands of operator nodes — cost seconds of driver time per
 run just to CONSTRUCT. Building the same expression as a SQL string and
 parsing it once with ``F.expr`` is ~1000x cheaper (one round-trip, JVM
-parser) and yields the identical analyzed tree. These helpers mirror the
-Column-side idioms in ``cleaning.steps`` (``let``/``pin``) as string
-combinators.
+parser) and yields the identical analyzed tree.
 
 Semantics note: everything here is text manipulation; all values, casts,
 and evaluation order are whatever the emitted SQL says. Emit literals
@@ -74,19 +72,30 @@ def q(s: str) -> str:
 def let(value: str, body) -> str:
     """Bind ``value`` once, use it many times inside ``body``.
 
-    String twin of ``cleaning.steps.let``: a single-element transform
-    gives a real lambda binding so the bound expression is evaluated
-    once per row however many times the body references it.
+    Spark has no let-expression; substituting an expression N times
+    duplicates its tree N times. A single-element transform gives a real
+    lambda binding, so the bound expression is evaluated once per row
+    however many times the body references it.
     """
     v = gensym("let")
     return f"try_element_at(transform(array({value}), {v} -> {body(v)}), 1)"
 
 
 def pin(value: str, seed: int) -> str:
-    """String twin of ``cleaning.steps.pin``: value-neutral nondeterminism
-    (the index is always 1; ``0.0 * rand`` is exactly 0.0) that stops
-    CollapseProject/PushDownPredicate re-inlining the expression per
-    consumer."""
+    """Identity wrapper that stops Catalyst re-evaluating ``value`` once
+    per consumer.
+
+    ``let`` binds within ONE expression; across expressions, CollapseProject
+    and PushDownPredicate inline a column's defining expression into every
+    consumer — including into HOF lambdas, where it then re-evaluates per
+    element. Embedding a seeded ``rand`` (value-neutral: the index is
+    always 1, ``0.0 * rand`` is exactly 0.0) flags the expression
+    nondeterministic, which those rules refuse to touch, so the column
+    materialises once per row and consumers reference it. Works for any
+    column type, including maps and arrays. Use only on expensive
+    multi-consumer columns: it also blocks filter pushdown through the
+    projection.
+    """
     return (
         f"try_element_at(array({value}), "
         f"cast(1.0D + 0.0D * rand({seed}) as int))"

@@ -55,9 +55,7 @@ def stream_clean_addresses(
     Arrow UDF (zero-shuffle). Returns the started StreamingQuery
     (availableNow trigger: drains what exists, then stops — the batch-able
     flavour; swap for processingTime on a live cluster)."""
-    cleaned = clean_addresses(
-        stream, side.rel_tok_freq, side.common_end_tokens, use_broadcast_tf=True
-    )
+    cleaned = clean_addresses(stream, side.rel_tok_freq, side.common_end_tokens)
     return (
         cleaned.writeStream.format("parquet")
         .option("path", output_dir)
