@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from uk_address_matcher_spark.checkpoint import CheckpointManager
@@ -42,6 +43,14 @@ def test_cluster_predictions_threshold(spark):
     assert out["m1"] == "c1" and out["m2"] == "c1" and out["c1"] == "c1"
     assert out["m3"] == "c2"
     assert "m9" not in out and "c3" not in out
+
+
+def test_cluster_predictions_all_below_threshold(spark):
+    pred = spark.createDataFrame(
+        [("c1", "m1", 1.0), ("c2", "m1", -3.0)],
+        "unique_id_l string, unique_id_r string, match_weight double",
+    )
+    assert cluster_predictions(pred, 5.0).count() == 0
 
 
 def test_checkpoint_manifest_and_resume(spark, tmp_path):
@@ -140,7 +149,7 @@ def test_connected_components_with_checkpointer(spark, tmp_path):
     assert any(k.startswith("cc_iter_") for k in ck.manifest["passes"])
 
 
-def test_bipartite_components_matches_general_cc(spark):
+def _assert_bipartite_matches_general_cc(spark, **kw):
     # random-ish bipartite graph incl. a chain c0-m0-c1-m1-...-c5 (tests
     # multi-round convergence) and isolated stars
     from uk_address_matcher_spark.clustering import bipartite_components
@@ -150,13 +159,22 @@ def test_bipartite_components_matches_general_cc(spark):
     ]
     stars = [("c100", f"m10{j}") for j in range(4)] + [("c200", "m300")]
     edges = spark.createDataFrame(chain + stars, "src string, dst string")
-    bi = {r["node"]: r["component"] for r in bipartite_components(edges).collect()}
-    from uk_address_matcher_spark.clustering import connected_components
-
+    bi = {r["node"]: r["component"] for r in bipartite_components(edges, **kw).collect()}
     gen = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert bi == gen
     assert bi["c5"] == "c0" and bi["m4"] == "c0"
     assert bi["m103"] == "c100"
+
+
+def test_bipartite_components_matches_general_cc(spark):
+    _assert_bipartite_matches_general_cc(spark)
+
+
+@pytest.mark.parametrize("driver_merge_limit", [2, 0])
+def test_bipartite_components_forced_rounds_match_general_cc(spark, driver_merge_limit):
+    # a small driver merge limit sends the merges through distributed
+    # rounds; 0 forces every merge there
+    _assert_bipartite_matches_general_cc(spark, driver_merge_limit=driver_merge_limit)
 
 
 def test_bipartite_components_with_checkpointer(spark, tmp_path):
@@ -170,3 +188,24 @@ def test_bipartite_components_with_checkpointer(spark, tmp_path):
     cc = {r["node"]: r["component"] for r in bipartite_components(edges, checkpointer=ck).collect()}
     assert cc == {"c1": "c1", "c2": "c1", "m1": "c1", "c9": "c9", "m9": "c9"}
     assert any(k.startswith("bcc_round_") for k in ck.manifest["passes"])
+
+
+def test_bipartite_components_distributed_round_checkpointed(spark, tmp_path):
+    # driver_merge_limit=0: the first merge cannot go to the driver, so
+    # round 0 runs a distributed hop, durably checkpointed
+    from uk_address_matcher_spark.clustering import bipartite_components
+
+    ck = CheckpointManager(spark, str(tmp_path / "bcc0"))
+    edges = spark.createDataFrame(
+        [("c1", "m1"), ("c2", "m1"), ("c2", "m2"), ("c3", "m2"), ("c9", "m9")],
+        "src string, dst string",
+    )
+    cc = {
+        r["node"]: r["component"]
+        for r in bipartite_components(edges, checkpointer=ck, driver_merge_limit=0).collect()
+    }
+    assert cc == {
+        "c1": "c1", "c2": "c1", "c3": "c1", "m1": "c1", "m2": "c1",
+        "c9": "c9", "m9": "c9",
+    }
+    assert "bcc_round_0" in ck.manifest["passes"]

@@ -106,10 +106,12 @@ def test_fused_disjointness_guard(spark):
         [("c1", "x", 9.0), ("x", "m2", 9.0)],
         "unique_id_l string, unique_id_r string, match_weight double",
     )
-    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
     with pytest.raises(ValueError, match="BOTH sides"):
         cluster_predictions(overlapping, 5.0)
-    # the raise path releases the frames it cached
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
-    # opting out skips the guard (caller-guaranteed disjointness)
-    assert cluster_predictions(ok, 5.0, check_disjoint=False).count() == 5
+    # the raise path releases the frames it cached (a subset check: the
+    # context cleaner may drop earlier tests' garbage frames meanwhile)
+    assert persisted() <= before

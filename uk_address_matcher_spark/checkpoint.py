@@ -31,10 +31,12 @@ from pyspark.sql import functions as F
 # artifact renamed predictions_pass1 -> pass1_candidates when it became
 # the pruned candidate set, and histograms moved from map to array
 # encoding; v3: predictions_pass2 dropped the block-level histogram map
-# columns to match the reference's final table). Resume across versions
-# is refused: silently feeding an old manifest's artifacts into new code
-# produces wrong results, not errors.
-FORMAT_VERSION = 3
+# columns to match the reference's final table; v4: the clustering
+# endgame artifact bcc_round_<i>_endgame holds the final (node, component)
+# rows instead of (c, lab) labels). Resume across versions is refused:
+# silently feeding an old manifest's artifacts into new code produces
+# wrong results, not errors.
+FORMAT_VERSION = 4
 
 
 class CheckpointManager:

@@ -121,7 +121,7 @@ def get_spark(
         # true row count, or the expected result is empty) or are
         # bounded diagnostics, so probing all partitions in ONE job
         # strictly reduces driver round-trips (measured: the clustering
-        # fast path's two collects were 3-4 jobs each at sf0.1).
+        # probe's two collects were 3-4 jobs each at sf0.1).
         # ORDER BY ... LIMIT paths (TakeOrderedAndProject) are unaffected.
         .config("spark.sql.limit.initialNumPartitions", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -133,6 +133,17 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     return [(h32(f"a{i}") | 1, h32(f"b{i}")) for i in range(num_hashes)]
 
 
+def _affine_sigs(base: Column, params: list[tuple[int, int]]) -> Column:
+    """MinHash signature of one base-hash array: per (a, b) in ``params``,
+    min over the array of (a * h + b) mod MERSENNE."""
+    return F.array(
+        *[
+            F.array_min(F.transform(base, lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE))
+            for a, b in params
+        ]
+    )
+
+
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", n: int = 3, num_hashes: int = 16
 ) -> DataFrame:
@@ -147,21 +158,12 @@ def minhash_signatures(
     from uk_address_matcher_spark.cleaning.steps import let
 
     params = minhash_params(num_hashes)
-
-    def sigs(base: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(base, lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE)
-                )
-                for a, b in params
-            ]
-        )
-
     base_hashes = F.transform(
         _shingles(F.col(text_col), n), lambda s: md5_int(s) % MERSENNE
     )
-    return _spread(df).select("doc_id", let(base_hashes, sigs).alias("sig"))
+    return _spread(df).select(
+        "doc_id", let(base_hashes, lambda base: _affine_sigs(base, params)).alias("sig")
+    )
 
 
 def minhash_lsh_pairs(
@@ -187,24 +189,15 @@ def minhash_lsh_pairs(
     # (identical values either way; this is the minhash_signatures /
     # shingle_table composition with the common subexpression hoisted)
     params = minhash_params(num_hashes)
-
-    def _sigs(base: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(base, lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE)
-                )
-                for a, b in params
-            ]
-        )
-
     arr = (
         _spread(df)
         .select("doc_id", _shingles(F.col(text_col), n).alias("__sh_arr"))
         .cache()
     )
     base_hashes = F.transform(F.col("__sh_arr"), lambda s: md5_int(s) % MERSENNE)
-    sigs = arr.select("doc_id", let(base_hashes, _sigs).alias("sig"))
+    sigs = arr.select(
+        "doc_id", let(base_hashes, lambda base: _affine_sigs(base, params)).alias("sig")
+    )
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
