@@ -43,6 +43,20 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
     assert ("d1", "d2") in pairs
 
 
+def test_minhash_lsh_pairs_releases_shingle_cache(spark, docs):
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    docs.count()  # the fixture's own cache is not the call's
+    before = persisted()
+    out = D.minhash_lsh_pairs(docs, verify_threshold=0.3)
+    assert ("d1", "d2") in {(r["doc_a"], r["doc_b"]) for r in out.collect()}
+    # the only RDD left persisted is the call's own materialised result
+    plan = out._jdf.queryExecution().analyzed()
+    own = {plan.rdd().id()} if plan.nodeName() == "LogicalRDD" else set()
+    assert persisted() - before <= own
+
+
 def test_simhash_exact_dups_equal(spark, docs):
     out = {r["doc_id"]: r["simhash"] for r in D.simhash(docs).collect()}
     assert out["d1"] == out["d2"]

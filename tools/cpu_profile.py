@@ -10,6 +10,8 @@ addr_link_2pass flow once with event logging and prints:
    read/write MB, tasks — sorted by CPU, top N
  - per-job walls and the INTER-JOB GAPS (driver planning / Py4J /
    Catalyst time — the fixed cost that dominates at sf0.1)
+ - the rep's Janino compilation count (classes compiled rather than
+   taken from the codegen cache: ~180 on a cold rep, 2-16 on a warm one)
 
 Usage: python tools/cpu_profile.py [n_canonical=50000] [cpus=32]
 Output: human table + one JSON line (also /tmp/cpu_profile.json).
@@ -28,6 +30,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 EVENT_DIR = os.path.join(tempfile.gettempdir(), "uam-cpu-events")
+# job group that tags the last rep's jobs (the warm-profile window)
+LAST_REP_GROUP = "uam_cpu_profile_last_rep"
 
 
 def parse_events(app_id: str) -> dict:
@@ -82,11 +86,13 @@ def parse_events(app_id: str) -> dict:
             if st is not None and si.get("Completion Time") and si.get("Submission Time"):
                 st["wall_s"] = (si["Completion Time"] - si["Submission Time"]) / 1e3
         elif ev == "SparkListenerJobStart":
-            desc = (e.get("Properties") or {}).get("spark.job.description", "")[:60]
+            props = e.get("Properties") or {}
+            desc = props.get("spark.job.description", "")[:60]
             job_open[e["Job ID"]] = {
                 "job": e["Job ID"],
                 "t0": e["Submission Time"],
                 "desc": desc,
+                "group": props.get("spark.jobGroup.id"),
                 "stage_ids": list(e.get("Stage IDs", [])),
             }
             for sid in e.get("Stage IDs", []):
@@ -125,7 +131,7 @@ def main():
     )
     from uk_address_matcher_spark.extract import extract_addresses
     from uk_address_matcher_spark.linkage import build_side_tables, link_addresses
-    from uk_address_matcher_spark.session import get_spark
+    from uk_address_matcher_spark.session import codegen_compilations, get_spark
 
     os.makedirs(EVENT_DIR, exist_ok=True)
     spark = get_spark(
@@ -152,11 +158,13 @@ def main():
     # min-of-reps methodology), vs the default cold-JVM single shot
     reps = int(os.environ.get("CPU_PROFILE_REPS", "1"))
     pred_path = os.path.join(tempfile.gettempdir(), f"uam_prof_{os.getpid()}.parquet")
-    t_setup = wall = t_last_ms = 0.0
+    t_setup = wall = 0.0
     for rep in range(reps):
         canon.cache().count(), messy.cache().count()
+        if rep == reps - 1:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", LAST_REP_GROUP)
+        compiled0 = codegen_compilations(spark)
         t_setup = time.time()
-        t_last_ms = t_setup * 1000.0
         side = build_side_tables(
             spark, canon, rel_tok_freq=domain_token_frequencies(spark)
         )
@@ -183,6 +191,8 @@ def main():
         clusters = cluster_predictions(slim, threshold_match_weight=5.0)
         n_clusters = clusters.count()
         wall = time.time() - t_setup
+        # classes the rep compiled rather than took from the codegen cache
+        rep_compilations = codegen_compilations(spark) - compiled0
     spark.stop()
     shutil.rmtree(pred_path, ignore_errors=True)
     pass_walls = {}
@@ -197,9 +207,11 @@ def main():
 
     prof = parse_events(app_id)
     if reps > 1:
-        # window to the LAST rep: jobs submitted after its t0, and only
-        # the stages those jobs own
-        prof["jobs"] = [j for j in prof["jobs"] if j["t0"] >= t_last_ms - 500]
+        # window to the LAST rep: jobs from its first job id on (job ids
+        # are assigned in submission order, so no earlier rep's job can
+        # leak in), and only the stages those jobs own
+        first = min(j["job"] for j in prof["jobs"] if j["group"] == LAST_REP_GROUP)
+        prof["jobs"] = [j for j in prof["jobs"] if j["job"] >= first]
         keep = {sid for j in prof["jobs"] for sid in j.get("stage_ids", [])}
         prof["stages"] = {
             sid: st for sid, st in prof["stages"].items() if sid in keep
@@ -213,7 +225,10 @@ def main():
     stages = sorted(prof["stages"].items(), key=lambda kv: -kv[1]["cpu_s"])
     total_cpu = sum(s["cpu_s"] for _, s in stages)
     total_gap = sum(g["gap_s"] for g in prof["gaps"])
-    print(f"\nwall={wall:.1f}s n_pred={n_pred} n_clusters={n_clusters}")
+    print(
+        f"\nwall={wall:.1f}s n_pred={n_pred} n_clusters={n_clusters} "
+        f"codegen compilations={rep_compilations}"
+    )
     if pass_walls:
         print("pass walls:", json.dumps(pass_walls))
     print(f"total executor CPU {total_cpu:.1f}s across {len(stages)} stages; "
@@ -239,6 +254,7 @@ def main():
         "total_cpu_s": round(total_cpu, 1),
         "driver_gap_s": round(total_gap, 1),
         "n_jobs": len(prof["jobs"]),
+        "rep_compilations": rep_compilations,
         "top_stages": [
             {"id": sid, **{k: (round(v, 1) if isinstance(v, float) else v) for k, v in s.items()}}
             for sid, s in stages[:18]
@@ -247,7 +263,7 @@ def main():
     }
     with open("/tmp/cpu_profile.json", "w") as f:
         json.dump(out, f, indent=1)
-    print("\n" + json.dumps({k: out[k] for k in ("wall_s", "total_cpu_s", "driver_gap_s", "n_jobs")}))
+    print("\n" + json.dumps({k: out[k] for k in ("wall_s", "total_cpu_s", "driver_gap_s", "n_jobs", "rep_compilations")}))
 
 
 if __name__ == "__main__":

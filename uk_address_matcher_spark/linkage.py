@@ -250,7 +250,10 @@ def link_cleaned(
     ``cl``/``cr`` must be materialised (cached or checkpointed) by the
     caller; each feeds multiple plan branches here.
     """
-    from uk_address_matcher_spark.scoring import attach_display_columns
+    from uk_address_matcher_spark.scoring import (
+        _sides_broadcastable,
+        attach_display_columns,
+    )
     from uk_address_matcher_spark.second_pass import (
         PRUNE_MATCH_WEIGHT_THRESHOLD,
         PRUNE_TOP_N,
@@ -269,6 +272,8 @@ def link_cleaned(
     # costs one narrow shuffle, orders of magnitude less than the encode
     # wave the checkpoint charged every run.
     pairs = block(cl, cr, rules=rules, salt=salt)
+    # one size-gate probe (two count jobs) serves both attach steps
+    bcast = _sides_broadcastable(cl, cr)
     # score in COMPACT form (no display strings through the pair
     # exchanges); when the second pass follows, the prune to exactly its
     # candidate set (threshold -20 + top-5 per messy record) is FUSED
@@ -286,9 +291,11 @@ def link_cleaned(
         prune_top_n=(
             (PRUNE_MATCH_WEIGHT_THRESHOLD, PRUNE_TOP_N) if second_pass else None
         ),
+        broadcast_sides=bcast,
     )
     pred = attach_display_columns(
-        pred, cl, cr, retain_matching_columns=not second_pass
+        pred, cl, cr, retain_matching_columns=not second_pass,
+        broadcast_sides=bcast,
     )
     if checkpointer is not None:
         # the artifact NAME states its semantics: with a second pass the

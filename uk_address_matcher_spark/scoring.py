@@ -626,6 +626,7 @@ def score_pairs(
     retain_matching_columns: bool = True,
     attach_display: bool = True,
     prune_top_n: tuple[float, int] | None = None,
+    broadcast_sides: bool | None = None,
 ) -> DataFrame:
     """(unique_id_l, unique_id_r) pairs -> scored prediction table.
 
@@ -657,6 +658,10 @@ def score_pairs(
     Materialising the full frame costs real time — the token-histogram
     maps dominate the parquet encode of a pass-1 checkpoint — so drop them
     when only the second pass consumes the output.
+
+    ``broadcast_sides``: None probes the size gate (_sides_broadcastable,
+    two count jobs); a caller that also calls attach_display_columns
+    computes the decision once and passes it to both.
     """
     # slim payload: blocking-key arrays (unusual_* bands) are not used by
     # scoring or the second pass — dropping them shrinks the pair-attach
@@ -678,8 +683,9 @@ def score_pairs(
 
     left = _suffix(_compact(cleaned_l, keep_l), "_l")
     right = _suffix(_compact(cleaned_r, keep_r, rf=False), "_r")
-    bcast_sides = _sides_broadcastable(cleaned_l, cleaned_r)
-    if bcast_sides:
+    if broadcast_sides is None:
+        broadcast_sides = _sides_broadcastable(cleaned_l, cleaned_r)
+    if broadcast_sides:
         # BROADCAST the compact sides: the two-key attach otherwise
         # re-exchanges the (pairs x left-signature) INTERMEDIATE — n_pairs
         # wide rows — to co-locate on unique_id_r (measured 5.1 GB of
@@ -785,7 +791,7 @@ def score_pairs(
     if attach_display:
         df = attach_display_columns(
             df, cleaned_l, cleaned_r, retain_matching_columns,
-            broadcast_sides=bcast_sides,
+            broadcast_sides=broadcast_sides,
         )
     return df
 

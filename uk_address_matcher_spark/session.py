@@ -5,6 +5,9 @@ Defaults chosen for the 100TB design point and safe for local[*] testing:
  - Arrow on (vectorized pandas UDF exchange; the only Python in the hot
    path is Arrow-batched)
  - shuffle partitions sized by caller (cluster: ~2-3x total cores)
+ - compiled-class cache of 1024 entries (Spark's default 100 is below
+   the ~180 classes one linkage + clustering run generates, so repeat
+   runs recompiled every class)
 """
 
 from __future__ import annotations
@@ -51,21 +54,22 @@ def _default_local_dir() -> str | None:
     return os.path.join(shm, f"spark-local-{os.getuid()}")
 
 
-def get_spark(
-    app_name: str = "uk_address_matcher_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
-) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[{}]".format(
-        os.environ.get("SPARK_GRAFT_CPUS", "*")
-    )
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+_JAVA_OPTS_KEYS = ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions")
+
+
+def _session_conf(
+    master: str, shuffle_partitions: int, extra_conf: dict | None = None
+) -> dict[str, str]:
+    """The conf get_spark builds its session from, as a plain dict.
+
+    ``extra_conf`` entries override the defaults, except the two
+    ``extraJavaOptions`` keys: those are space-joined AFTER the
+    SPARK_GRAFT_JAVA_OPTS value (later JVM flags win on conflict), so a
+    caller adding e.g. a JFR flag keeps the environment's options."""
+    conf = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # This pipeline's pair-scale exchanges are CPU-dense but
         # byte-light (compact signature rows fan out into histogram/map
         # algebra downstream), so AQE's byte-targeted coalescing packs
@@ -77,10 +81,9 @@ def get_spark(
         # for >=2-4 tasks/core at every level we run; tiny shuffles
         # still coalesce (minPartitionSize default 1 MB), and the knob
         # only shapes AQE shuffle reads, not file scans.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "16m"),
-        )
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
+            "SPARK_GRAFT_ADVISORY_PARTITION", "16m"
+        ),
         # FILE-scan splits get the same treatment as AQE shuffle reads
         # (and for the same reason): the durable pass artifacts are
         # CPU-dense per byte — the pass-1 scoring stage reads the 552 MB
@@ -98,13 +101,10 @@ def get_spark(
         # cluster the library keeps Spark's 128m — a multi-thousand-core
         # deployment reading 100 TB would otherwise multiply its scan-task
         # count ~8x. SPARK_GRAFT_MAX_PARTITION_BYTES overrides either way.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get(
-                "SPARK_GRAFT_MAX_PARTITION_BYTES",
-                "16m" if master.startswith("local") else "128m",
-            ),
-        )
+        "spark.sql.files.maxPartitionBytes": os.environ.get(
+            "SPARK_GRAFT_MAX_PARTITION_BYTES",
+            "16m" if master.startswith("local") else "128m",
+        ),
         # NOTE: spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
         # stays at its default (false). Enabling it lets AQE coalesce
         # cached builds by BYTES, which collapsed the second pass's
@@ -123,25 +123,68 @@ def get_spark(
         # strictly reduces driver round-trips (measured: the clustering
         # probe's two collects were 3-4 jobs each at sf0.1).
         # ORDER BY ... LIMIT paths (TakeOrderedAndProject) are unaffected.
-        .config("spark.sql.limit.initialNumPartitions", "1000")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        "spark.sql.limit.initialNumPartitions": "1000",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
         # deterministic, locale-independent string comparison
-        .config("spark.sql.legacy.respectNullabilityInTextDatasetConversion", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
+        "spark.sql.legacy.respectNullabilityInTextDatasetConversion": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+        # One link_addresses + cluster_predictions run generates ~180
+        # distinct classes (177-185 Janino compilations for a benchmark
+        # unit in a fresh JVM), and Spark's compiled-class cache holds 100
+        # by default. Every run plans the same stages in the same order, so
+        # an LRU smaller than that cyclic working set evicts each class
+        # just before its next use: a 0% hit rate, and every repeat run
+        # (each streaming micro-batch, each benchmark unit) recompiles
+        # everything. 1024 holds several runs' worth; measured 177 -> 2
+        # compilations per repeat run.
+        "spark.sql.codegen.cache.maxEntries": "1024",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+    }
     java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
     if java_opts:
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", java_opts
-        ).config("spark.executor.extraJavaOptions", java_opts)
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        for k in _JAVA_OPTS_KEYS:
+            conf[k] = java_opts
     local_dir = _default_local_dir()
     if local_dir is not None:
-        builder = builder.config("spark.local.dir", local_dir)
+        conf["spark.local.dir"] = local_dir
     for k, v in (extra_conf or {}).items():
+        if k in _JAVA_OPTS_KEYS and conf.get(k):
+            v = f"{conf[k]} {v}"
+        conf[k] = v
+    return conf
+
+
+def get_spark(
+    app_name: str = "uk_address_matcher_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict | None = None,
+) -> SparkSession:
+    """Get or create the session with the defaults of _session_conf.
+
+    Static confs (``spark.sql.codegen.cache.maxEntries``, the driver
+    memory and JVM options, ``spark.local.dir``) take effect only when
+    this call CREATES the session: getOrCreate hands back a running
+    session as it is. The codegen cache is also JVM-global, sized once on
+    first use, so a later session in the same JVM keeps the first size.
+    """
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[{}]".format(
+        os.environ.get("SPARK_GRAFT_CPUS", "*")
+    )
+    if shuffle_partitions is None:
+        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in _session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Janino compilations so far in this JVM (Spark's CodegenMetrics).
+
+    The delta around a run counts the generated classes it compiled
+    rather than took from the codegen cache."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -231,7 +231,7 @@ def minhash_lsh_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    return (
+    verified = (
         inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("sz_a")), "doc_a")
         .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("sz_b")), "doc_b")
         .select(
@@ -243,6 +243,12 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("jaccard") >= verify_threshold)
     )
+    # materialise the (small) verified-pair set so the cached shingle
+    # arrays are released before returning, on the raise path too
+    try:
+        return verified.localCheckpoint()
+    finally:
+        arr.unpersist()
 
 
 def simhash_near_duplicates(
