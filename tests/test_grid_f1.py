@@ -12,13 +12,19 @@ from uk_address_matcher_spark.linkage import build_side_tables, link_addresses
 
 
 @pytest.fixture(scope="module")
-def grid_run(spark):
+def grid_inputs(spark):
     canon_docs, messy_docs, labels = grid_documents(spark, 3000, dup_factor=1)
     canon = extract_addresses(canon_docs).cache()
     messy = extract_addresses(messy_docs).cache()
     side = build_side_tables(
         spark, canon, rel_tok_freq=domain_token_frequencies(spark)
     )
+    return labels, canon, messy, side
+
+
+@pytest.fixture(scope="module")
+def grid_run(grid_inputs):
+    labels, canon, messy, side = grid_inputs
     improved = link_addresses(canon, messy, side).cache()
     return labels, improved
 
@@ -43,6 +49,23 @@ def test_golden_output_pin(spark, grid_run):
         F.sum(F.col("match_weight").cast("decimal(38,9)")).alias("s"),
     ).collect()[0]
     assert (r["n"], str(r["s"])) == (GOLDEN_PREDICTIONS, GOLDEN_WEIGHT_SUM)
+
+
+def test_postcode_locality_same_output(spark, grid_inputs, grid_run):
+    """Range-partitioning the input by postcode is a pure layout change:
+    the same predictions and the same exact weight checksum."""
+    _, canon, messy, side = grid_inputs
+    _, improved = grid_run
+
+    def pin(pred):
+        r = pred.agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("match_weight").cast("decimal(38,9)")).alias("s"),
+        ).collect()[0]
+        return r["n"], str(r["s"])
+
+    local = link_addresses(canon, messy, side, postcode_locality=True)
+    assert pin(local) == pin(improved)
 
 
 def test_salted_blocking_same_result(spark, grid_run):

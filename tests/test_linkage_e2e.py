@@ -115,3 +115,28 @@ def test_side_table_collect_guard(spark):
     )
     with pytest.raises(ValueError, match="pre-aggregated TF table|rel_tok_freq"):
         build_side_tables(spark, df, max_side_rows=50)
+
+
+def test_fused_side_tables_match_single_table_api(spark):
+    """build_side_tables' one fused job must give exactly what the three
+    single-table get_* functions give. The doubles compare exactly: both
+    sides divide integer counts below 2^53."""
+    from uk_address_matcher_spark.linkage import build_side_tables
+
+    docs, _ = edge_case_documents(spark)
+    flat = extract_addresses(docs).drop("side", "test_block")
+    # at a 3% share the edge corpus's common-end list has tied counts
+    # (SANDS/STREET at 5, ALBANS/BIRDTON/HITCHIN at 4), so the list
+    # comparison also pins the (count desc, token asc) tie order
+    side = build_side_tables(
+        spark, flat, common_end_min_share=0.03, rel_tok_freq=None
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(side.rel_tok_freq) == rows(get_address_token_frequencies(flat))
+    assert rows(side.numeric_tf) == rows(get_numeric_term_frequencies(flat))
+    cet = get_common_end_tokens(flat, min_share=0.03)
+    assert cet[:3] == ["LONDON", "KEYNES", "LANE"]
+    assert side.common_end_tokens == cet

@@ -93,21 +93,11 @@ def test_tmpfs_local_dir_gating(monkeypatch):
     assert (sess._default_local_dir() or "").startswith("/dev/shm")
 
 
-def test_sharded_street_model_small_n_identical(spark):
-    """For n <= SHARD_DOCS the sharded generator must be bit-identical to
-    the old global model (keeps every small-sf golden/oracle unchanged)."""
-    from uk_address_matcher_spark.corpus import grid_canonical_flat
-
-    a = grid_canonical_flat(spark, 2000, street_model="sharded")
-    b = grid_canonical_flat(spark, 2000, street_model="global")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_sharded_street_model_bounds_block_sizes(spark):
-    """The round-4 finding: under the global model the hottest street
-    grows ~n^0.6, making candidate pairs superlinear. Sharding must hold
-    the hottest street at the 50k-shard level regardless of n."""
+    """A single global Zipf over n-proportional streets grows the hottest
+    street ~n^0.6, making candidate pairs superlinear (BENCH/CORPUS.md).
+    Sharding must hold the hottest street at the 50k-shard level
+    regardless of n."""
     from uk_address_matcher_spark.corpus import grid_canonical_flat
 
     def max_street_pop(df):
@@ -121,7 +111,5 @@ def test_sharded_street_model_bounds_block_sizes(spark):
         )
 
     ref50 = max_street_pop(grid_canonical_flat(spark, 50_000))
-    sharded150 = max_street_pop(grid_canonical_flat(spark, 150_000, "sharded"))
-    global150 = max_street_pop(grid_canonical_flat(spark, 150_000, "global"))
+    sharded150 = max_street_pop(grid_canonical_flat(spark, 150_000))
     assert sharded150 <= ref50 * 1.05  # bounded by the shard distribution
-    assert global150 > sharded150 * 1.5  # the defect the shard model removes

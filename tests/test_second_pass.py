@@ -32,7 +32,7 @@ def _pairs(spark, messy, canonicals, common_end_token=None):
 def _run(spark, messy, canonicals, common_end_token=None):
     df = _pairs(spark, messy, canonicals, common_end_token)
     out = improve_predictions_using_distinguishing_tokens(
-        df, match_weight_threshold=-100, top_n_matches=5, use_bigrams=True
+        df, match_weight_threshold=-100, top_n_matches=5
     )
     return {r["unique_id_l"]: r.asDict() for r in out.collect()}
 

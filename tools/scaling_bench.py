@@ -49,14 +49,7 @@ def run_level(cpus: int, n: int) -> dict:
         master=f"local[{cpus}]",
         shuffle_partitions=int(os.environ.get("SCALING_SHUFFLE", "64")),
     )
-    # SCALING_STREET_MODEL=global reruns the pre-round-5 generator whose
-    # hottest street grows ~n^0.6 (superlinear pairs/doc) — kept for the
-    # honest side-by-side of the corpus fix; default is the bounded
-    # sharded model
-    street_model = os.environ.get("SCALING_STREET_MODEL", "sharded")
-    canon_docs, messy_docs, _ = grid_documents(
-        spark, n, dup_factor=1, street_model=street_model
-    )
+    canon_docs, messy_docs, _ = grid_documents(spark, n, dup_factor=1)
     canon = extract_addresses(canon_docs).cache()
     messy = extract_addresses(messy_docs).cache()
     canon.count(), messy.count()  # corpus generation outside the timer
@@ -159,7 +152,6 @@ def run_level(cpus: int, n: int) -> dict:
         # must say whether it was JIT-warmed and where checkpoints went
         "warmup": os.environ.get("SCALING_WARMUP", "1") != "0",
         "ck_base": ck_base,
-        "street_model": street_model,
         "seconds": round(elapsed, 1),
         "docs": 2 * n,
         "docs_per_sec": round(2 * n / elapsed, 1),
@@ -199,10 +191,7 @@ def run_kernel(cpus: int, n: int) -> dict:
     spark = get_spark(
         app_name=f"uam_kernel_{cpus}", master=f"local[{cpus}]", shuffle_partitions=64
     )
-    street_model = os.environ.get("SCALING_STREET_MODEL", "sharded")
-    canon_docs, messy_docs, _ = grid_documents(
-        spark, n, dup_factor=1, street_model=street_model
-    )
+    canon_docs, messy_docs, _ = grid_documents(spark, n, dup_factor=1)
     canon = extract_addresses(canon_docs).cache()
     messy = extract_addresses(messy_docs).cache()
     canon.count(), messy.count()

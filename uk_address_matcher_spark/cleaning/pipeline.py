@@ -151,13 +151,18 @@ def get_numeric_term_frequencies(df: DataFrame) -> DataFrame:
     )
 
 
-def get_common_end_tokens(df: DataFrame, min_share: float = 0.005) -> list[str]:
+def get_common_end_tokens(df: DataFrame, min_share: float = 0.01) -> list[str]:
     """Most-frequent final tokens (towns/counties) of the cleaned corpus.
 
     The reference ships a CSV thresholded at count>3000 over a GB-scale
     corpus (cleaning_steps.py:495-502); for a closed corpus we threshold on
     the SHARE of rows whose address ends with the token, which is
-    scale-invariant.
+    scale-invariant. The default share matches build_side_tables'.
+
+    Ordered by (count desc, token asc): the list is inlined as an array
+    literal into the cleaning SQL, so a tie order that followed row
+    arrival would give different SQL text — and miss text-keyed plan and
+    codegen reuse — for the same corpus.
     """
     # project to the one needed column BEFORE caching: the count() and the
     # groupBy share one materialisation of the cleaning queue instead of
@@ -171,7 +176,7 @@ def get_common_end_tokens(df: DataFrame, min_share: float = 0.005) -> list[str]:
         .groupBy("token")
         .agg(F.count("*").alias("cnt"))
         .filter(F.col("cnt") > max(int(n * min_share), 3))
-        .orderBy(F.desc("cnt"))
+        .orderBy(F.desc("cnt"), F.asc("token"))
         .collect()
     )
     last.unpersist()

@@ -409,59 +409,38 @@ HOUSES_PER_STREET = 15  # average — the number of STREETS scales with the
 # corpus so postcode-block sizes stay fixed (real UK: ~1.8M postcodes for
 # ~30M addresses; block size must NOT grow with dataset size)
 MAX_STREETS = 380_000  # injectivity bound of the street->postcode encoding
-STREET_SKEW = 2.5  # street_idx = floor(u^SKEW * n_streets): Zipf-ish block sizes
+STREET_SKEW = 2.5  # local street = floor(u^SKEW * streets): Zipf-ish block sizes
 
-# Sharded street model (default): docs are split into fixed 50k-doc
-# shards, each drawing its OWN Zipf street distribution over its own
-# 4000 streets. Under the old "global" model the Zipf quantile mass on
-# street 0 is (1/n_streets)^(1/SKEW); with n_streets ∝ n the hottest
-# street grows ~n^0.6, so candidate pairs per doc were SUPERLINEAR
-# (measured: 37 pairs/doc at 100k docs -> 145 at 1M), and large-corpus
-# benchmarks measured the corpus, not the engine. Sharding bounds every
-# street by the 50k-shard distribution — pairs/doc is flat in n — and is
-# BIT-IDENTICAL to the old model for n <= SHARD_DOCS (shard 0's formula
-# equals the old one there), so all small-sf oracles/goldens and the
-# sf0.1 bench corpus are unchanged.
+# Sharded street model: docs are split into fixed 50k-doc shards, each
+# drawing its OWN Zipf street distribution over its own 4000 streets. A
+# single global Zipf over n_streets ∝ n puts quantile mass
+# (1/n_streets)^(1/SKEW) on street 0, so the hottest street grows ~n^0.6
+# and candidate pairs per doc go SUPERLINEAR (measured: 37 pairs/doc at
+# 100k docs -> 145 at 1M; BENCH/CORPUS.md). Sharding bounds every street
+# by the 50k-shard distribution, so pairs/doc is flat in n.
 SHARD_DOCS = 50_000
 STREETS_PER_SHARD = max(BASE_STREETS, SHARD_DOCS // HOUSES_PER_STREET)  # 4000
 MAX_SHARDS = MAX_STREETS // STREETS_PER_SHARD  # 95; beyond: street reuse
-
-
-def _n_streets(n: int) -> int:
-    return min(max(BASE_STREETS, n // HOUSES_PER_STREET), MAX_STREETS)
 
 
 def _pick(col_arr: list[str], idx: Column) -> Column:
     return F.element_at(F.array(*[F.lit(x) for x in col_arr]), (idx + 1).cast("int"))
 
 
-def grid_canonical_flat(
-    spark: SparkSession, n: int, street_model: str = "sharded"
-) -> DataFrame:
+def grid_canonical_flat(spark: SparkSession, n: int) -> DataFrame:
     """n canonical addresses, fully distributed + deterministic.
 
     Uniqueness by construction: house number = dense rank of the id within
-    its street (one window pass at generation time only).
-
-    ``street_model``: 'sharded' (default — street sizes bounded by the
-    50k-doc shard distribution, pairs/doc flat in n; identical to the old
-    model for n <= 50k) or 'global' (the pre-round-5 formula whose
-    hottest street grows ~n^0.6 — kept for side-by-side benchmarking of
-    the generator change, see BENCH/BASELINE.md).
+    its street (one window pass at generation time only). Street sizes
+    follow the sharded model above, so pairs/doc is flat in n.
     """
     from pyspark.sql import Window
 
     df = spark.range(n).withColumnRenamed("id", "seq")
     u = (F.abs(F.xxhash64(F.lit("street"), F.col("seq"))) % 100000) / 100000.0
-    if street_model == "sharded":
-        shard = (F.col("seq") / SHARD_DOCS).cast("long") % MAX_SHARDS
-        local = F.floor(F.pow(u, F.lit(STREET_SKEW)) * STREETS_PER_SHARD)
-        street_idx = (shard * STREETS_PER_SHARD + local).cast("long")
-    elif street_model == "global":
-        n_streets = _n_streets(n)
-        street_idx = F.floor(F.pow(u, F.lit(STREET_SKEW)) * n_streets).cast("long")
-    else:
-        raise ValueError(f"unknown street_model: {street_model!r}")
+    shard = (F.col("seq") / SHARD_DOCS).cast("long") % MAX_SHARDS
+    local = F.floor(F.pow(u, F.lit(STREET_SKEW)) * STREETS_PER_SHARD)
+    street_idx = (shard * STREETS_PER_SHARD + local).cast("long")
     df = df.withColumn("street_idx", street_idx)
     w = Window.partitionBy("street_idx").orderBy("seq")
     df = df.withColumn("house_no", F.row_number().over(w))
@@ -471,21 +450,20 @@ def grid_canonical_flat(
     # different (injective) postcode sector — as real street names do
     # across UK towns; (address_concat, postcode) stays globally unique
     name = _pick(_STREET_NAMES, F.col("street_idx") % len(_STREET_NAMES))
-    if street_model == "sharded":
-        # NAME-TOKEN VOCABULARY must grow with the corpus, as real data's
-        # does: with the fixed 40-name vocabulary, the token-keyed
-        # blocking rules go superlinear — measured per-rule at 50k vs
-        # 500k canonical, rule [(V1,V1),(N1,N1)] (very-unusual token +
-        # house number, no postcode) is 1.3M pairs (34%) at 100k docs but
-        # 125.8M (80%) at 1M: ~n^2, because every 40th street shares one
-        # name token. Suffix the name with the text-range index so each
-        # 5,120-street range gets a fresh 40-name vocabulary (vocab size
-        # ~ n_streets/128, block sizes flat in n). street_idx < 5120
-        # covers all n <= 50k canonical (shard 0 only) — those corpora,
-        # including the sf0.1 bench and every golden pin, are unchanged.
-        text_radix = len(_STREET_NAMES) * len(_STREET_KINDS) * len(_TOWNS)
-        g = (F.col("street_idx") / text_radix).cast("long")
-        name = F.when(g > 0, F.concat(name, g.cast("string"))).otherwise(name)
+    # NAME-TOKEN VOCABULARY must grow with the corpus, as real data's
+    # does: with the fixed 40-name vocabulary, the token-keyed
+    # blocking rules go superlinear — measured per-rule at 50k vs
+    # 500k canonical, rule [(V1,V1),(N1,N1)] (very-unusual token +
+    # house number, no postcode) is 1.3M pairs (34%) at 100k docs but
+    # 125.8M (80%) at 1M: ~n^2, because every 40th street shares one
+    # name token. Suffix the name with the text-range index so each
+    # 5,120-street range gets a fresh 40-name vocabulary (vocab size
+    # ~ n_streets/128, block sizes flat in n). street_idx < 5120
+    # covers all n <= 50k canonical (shard 0 only), so those corpora
+    # carry no suffix.
+    text_radix = len(_STREET_NAMES) * len(_STREET_KINDS) * len(_TOWNS)
+    g = (F.col("street_idx") / text_radix).cast("long")
+    name = F.when(g > 0, F.concat(name, g.cast("string"))).otherwise(name)
     kind = _pick(
         _STREET_KINDS,
         (F.col("street_idx") / len(_STREET_NAMES)).cast("long") % len(_STREET_KINDS),
@@ -621,7 +599,7 @@ def skew_postcodes(
     postcode collides with it: grid outwards end at letter pairs from the
     street encoding, and the messy typo class writes digit 0, never 9).
 
-    Used by tools/skew_bench.py for the salted-vs-unsalted A/B and by the
+    Used by the perfbench ``skew_link`` workload and by the salted-blocking
     skew invariance test; deterministic, content-keyed, partition-safe.
     """
     if not 0.0 < hot_share <= 1.0:
@@ -649,10 +627,9 @@ def grid_documents(
     spark: SparkSession,
     n_canonical: int,
     dup_factor: int = 1,
-    street_model: str = "sharded",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(canonical_docs, messy_docs, labels) at any scale."""
-    canon = grid_canonical_flat(spark, n_canonical, street_model=street_model)
+    canon = grid_canonical_flat(spark, n_canonical)
     messy, labels = messy_from_canonical(canon, dup_factor)
     # AQE coalesces the house-number window's shuffle output to ONE
     # partition (the rows are tiny by bytes), so without this every

@@ -146,7 +146,6 @@ def improve_predictions_using_distinguishing_tokens(
     df_predict: DataFrame,
     match_weight_threshold: float = PRUNE_MATCH_WEIGHT_THRESHOLD,
     top_n_matches: int = PRUNE_TOP_N,
-    use_bigrams: bool = True,
     checkpointer=None,
     assume_pruned: bool = False,
 ) -> DataFrame:
@@ -368,15 +367,11 @@ def improve_predictions_using_distinguishing_tokens(
         f" - size(map_keys(tokens_elsewhere_in_block_but_not_this))"
         f" * {X.d(PUNISHMENT_MULTIPLIER)}"
         f" - size(missing_tokens) * {X.d(MISSING_TOKEN_PENALTY)}"
+        f" + {_map_sum_inv_sq('overlapping_bigrams_this_l_and_r_filtered')}"
+        f" * {X.d(BIGRAM_REWARD_MULTIPLIER)}"
+        f" - size(map_keys(bigrams_elsewhere_in_block_but_not_this_filtered))"
+        f" * {X.d(BIGRAM_PUNISHMENT_MULTIPLIER)}"
     )
-    if use_bigrams:
-        adj = (
-            f"{adj}"
-            f" + {_map_sum_inv_sq('overlapping_bigrams_this_l_and_r_filtered')}"
-            f" * {X.d(BIGRAM_REWARD_MULTIPLIER)}"
-            f" - size(map_keys(bigrams_elsewhere_in_block_but_not_this_filtered))"
-            f" * {X.d(BIGRAM_PUNISHMENT_MULTIPLIER)}"
-        )
 
     return (
         df.withColumn("mw_adjustment", F.expr(X.pin(adj, 19)))
