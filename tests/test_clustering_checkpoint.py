@@ -73,6 +73,19 @@ def test_checkpoint_manifest_and_resume(spark, tmp_path):
     assert os.path.getmtime(os.path.join(base, "_manifest.json")) == before_mtime
 
 
+def test_checkpoint_keeps_caller_job_description(spark, tmp_path):
+    """checkpoint() labels its own jobs ``pass:<name>`` and then hands the
+    caller's job description back instead of clearing it."""
+    sc = spark.sparkContext
+    ck = CheckpointManager(spark, str(tmp_path / "desc"))
+    sc.setJobDescription("outer")
+    try:
+        ck.checkpoint(spark.range(10), "pass_a")
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setJobDescription(None)
+
+
 def test_resume_refuses_cross_format_version(spark, tmp_path):
     import json
 

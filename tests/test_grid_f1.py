@@ -52,8 +52,11 @@ def test_golden_output_pin(spark, grid_run):
 
 
 def test_postcode_locality_same_output(spark, grid_inputs, grid_run):
-    """Range-partitioning the input by postcode is a pure layout change:
+    """Range-partitioning the inputs by postcode
+    (sources.repartition_by_postcode_locality) is a pure layout change:
     the same predictions and the same exact weight checksum."""
+    from uk_address_matcher_spark.sources import repartition_by_postcode_locality
+
     _, canon, messy, side = grid_inputs
     _, improved = grid_run
 
@@ -64,7 +67,11 @@ def test_postcode_locality_same_output(spark, grid_inputs, grid_run):
         ).collect()[0]
         return r["n"], str(r["s"])
 
-    local = link_addresses(canon, messy, side, postcode_locality=True)
+    local = link_addresses(
+        repartition_by_postcode_locality(canon),
+        repartition_by_postcode_locality(messy),
+        side,
+    )
     assert pin(local) == pin(improved)
 
 

@@ -27,27 +27,66 @@ def scoring_inputs(spark):
     return pairs, cl, cr, side.numeric_tf
 
 
+SCORED = ["unique_id_l", "unique_id_r", "match_weight", "match_probability"]
+
+
 def _rows(df):
-    return sorted(
-        (r["unique_id_l"], r["unique_id_r"], r["match_weight"], r["match_probability"])
-        for r in df.select(
-            "unique_id_l", "unique_id_r", "match_weight", "match_probability"
-        ).collect()
-    )
+    cols = SCORED + sorted(c for c in df.columns if c.startswith("bf_"))
+    return sorted(tuple(r) for r in df.select(cols).collect())
 
 
 def test_fused_prune_matches_external_prune(spark, scoring_inputs):
     """prune_top_n must be exactly prune_candidates applied to the full
-    scored output (the contract linkage relies on)."""
+    scored output (the contract linkage relies on); under retain_bf the
+    Bayes factors ride through the window unchanged."""
     pairs, cl, cr, ntf = scoring_inputs
-    full = score_pairs(
-        pairs, cl, cr, ntf,
-        threshold_match_weight=-50.0, attach_display=False,
+    for retain_bf in (False, True):
+        full = score_pairs(
+            pairs, cl, cr, ntf,
+            threshold_match_weight=-50.0, attach_display=False, retain_bf=retain_bf,
+        )
+        pruned_ext = prune_candidates(full, -20.0, 5)
+        fused = score_pairs(
+            pairs, cl, cr, ntf,
+            threshold_match_weight=-50.0, attach_display=False, retain_bf=retain_bf,
+            prune_top_n=(-20.0, 5),
+        )
+        assert sum(c.startswith("bf_") for c in fused.columns) == (8 if retain_bf else 0)
+        assert _rows(pruned_ext) == _rows(fused)
+
+
+def _pair_joins(df) -> int:
+    """Join nodes in the optimized plan whose output holds both ids, i.e.
+    joins evaluated once per candidate pair rather than once per record."""
+    n, stack = 0, [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        names, it = set(), node.output().iterator()
+        while it.hasNext():
+            names.add(it.next().name())
+        if node.nodeName() == "Join" and {"unique_id_l", "unique_id_r"} <= names:
+            n += 1
+        it = node.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+    return n
+
+
+def test_numeric_tf_is_attached_per_record(spark, scoring_inputs):
+    """Only the two side-attach joins run on pair rows: the numeric TF
+    lookups join the per-record sides before the pair join."""
+    pairs, cl, cr, ntf = scoring_inputs
+    scored = score_pairs(
+        pairs, cl, cr, ntf, threshold_match_weight=-50.0, attach_display=False
     )
-    pruned_ext = prune_candidates(full, -20.0, 5)
-    fused = score_pairs(
-        pairs, cl, cr, ntf,
-        threshold_match_weight=-50.0, attach_display=False,
-        prune_top_n=(-20.0, 5),
+    assert _pair_joins(scored) == 2
+
+
+@pytest.mark.parametrize("prune_top_n", [None, (-20.0, 5)])
+def test_compact_output_is_ids_weight_probability(spark, scoring_inputs, prune_top_n):
+    pairs, cl, cr, ntf = scoring_inputs
+    scored = score_pairs(
+        pairs, cl, cr, ntf, threshold_match_weight=-50.0,
+        attach_display=False, prune_top_n=prune_top_n,
     )
-    assert _rows(pruned_ext) == _rows(fused)
+    assert scored.columns == SCORED

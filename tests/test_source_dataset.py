@@ -34,9 +34,7 @@ def test_output_pairs_tagged_c_and_m(spark):
         common_end_min_share=0.05,
         rel_tok_freq=domain_token_frequencies(spark),
     )
-    pred = link_addresses(
-        canon, messy, side, rules=block_on(["test_block"]), second_pass=False
-    )
+    pred = link_addresses(canon, messy, side, rules=block_on(["test_block"]))
     tags = pred.select("source_dataset_l", "source_dataset_r").distinct().collect()
     assert len(tags) == 1
     assert tags[0]["source_dataset_l"] == "c_"

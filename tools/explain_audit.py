@@ -89,8 +89,8 @@ def main() -> None:
         attach_display=False, prune_top_n=(-20.0, 5),
     )
     sections.append(
-        ("Scoring B&B (linkage path): bound filter + rank windows "
-         "+ survivors-only histogram product", plan_of(pruned))
+        ("Scoring, linkage path: threshold + fused top-n window "
+         "over (ids, weight) rows", plan_of(pruned))
     )
 
     imp = improve_predictions_using_distinguishing_tokens(pred)

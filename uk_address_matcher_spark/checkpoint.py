@@ -47,14 +47,12 @@ class CheckpointManager:
         resume: bool = False,
         table_format: str = "parquet",
         table_prefix: str = "",
-        collect_metrics: bool = True,
     ):
         self.spark = spark
         self.base_path = base_path.rstrip("/")
         self.resume = resume
         self.table_format = table_format
         self.table_prefix = table_prefix
-        self.collect_metrics = collect_metrics
         os.makedirs(self.base_path, exist_ok=True)
         self.manifest_path = os.path.join(self.base_path, "_manifest.json")
         if not resume:
@@ -110,8 +108,10 @@ class CheckpointManager:
             return self.read(name)
         t0 = time.time()
         # label the materialisation's jobs with the pass name so event-log
-        # profiles (tools/cpu_profile.py) attribute stages to passes
+        # profiles (tools/cpu_profile.py) attribute stages to passes, then
+        # hand the caller's own label back
         sc = self.spark.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(f"pass:{name}")
         try:
             if self.table_format == "iceberg":
@@ -119,18 +119,16 @@ class CheckpointManager:
             else:
                 df.write.mode("overwrite").parquet(self._path(name))
         finally:
-            sc.setJobDescription(None)
+            sc.setJobDescription(caller)
         out = self.read(name)
-        entry: dict = {
+        self.manifest["passes"][name] = {
             "path": self._path(name),
             "format": self.table_format,
             "schema": out.schema.simpleString(),
             "wall_seconds": round(time.time() - t0, 3),
             "complete": True,
+            "metrics": self._metrics(out, name),
         }
-        if self.collect_metrics:
-            entry["metrics"] = self._metrics(out, name)
-        self.manifest["passes"][name] = entry
         self._save_manifest()
         return out
 

@@ -47,7 +47,6 @@ def cmd_link(args) -> None:
     pred = link_addresses(
         canon, messy, side, salt=args.salt, checkpointer=ck,
         threshold_match_weight=args.threshold,
-        postcode_locality=args.postcode_locality,
     )
     pred.write.mode("overwrite").parquet(args.output + "/predictions")
     if args.cluster:
@@ -135,11 +134,6 @@ def main(argv=None) -> None:
     link.add_argument("--threshold", type=float, default=-50.0)
     link.add_argument("--cluster", action="store_true")
     link.add_argument("--cluster-threshold", type=float, default=5.0)
-    link.add_argument(
-        "--postcode-locality", action="store_true",
-        help="range-partition input by postcode before cleaning "
-        "(the reference's ORDER BY postcode ingest guidance)",
-    )
     _add_common(link)
     link.set_defaults(fn=cmd_link)
 

@@ -168,18 +168,10 @@ def link_addresses(
     rules=None,
     salt: int = 1,
     threshold_match_weight: float = -50.0,
-    second_pass: bool = True,
     checkpointer=None,
-    postcode_locality: bool = False,
 ) -> DataFrame:
     """Full two-pass linkage. ``checkpointer`` (optional,
     checkpoint.CheckpointManager) persists each pass for lineage/resume.
-
-    ``postcode_locality=True`` range-partitions the input by postcode
-    before cleaning (the reference's ORDER BY postcode ingest guidance,
-    readme.md:52-53): rows that will block together are co-located, so
-    the blocking exchange moves mostly-local data. Off by default —
-    worthwhile when the input arrives in postcode-random order at scale.
 
     source_dataset contract (reference splink_model.py:38-46 +
     tests/test_source_dataset.py:74-87): inputs must NOT carry a
@@ -203,12 +195,6 @@ def link_addresses(
     tagged = canonical_flat.withColumn("__side", F.lit("c")).unionByName(
         messy_flat.withColumn("__side", F.lit("m")), allowMissingColumns=True
     )
-    if postcode_locality:
-        from uk_address_matcher_spark.sources import (
-            repartition_by_postcode_locality,
-        )
-
-        tagged = repartition_by_postcode_locality(tagged)
     cleaned = clean_addresses(tagged, side.rel_tok_freq, side.common_end_tokens)
     if checkpointer is not None:
         cleaned = checkpointer.checkpoint(cleaned, "cleaned_all")
@@ -227,7 +213,6 @@ def link_addresses(
         rules=rules,
         salt=salt,
         threshold_match_weight=threshold_match_weight,
-        second_pass=second_pass,
         checkpointer=checkpointer,
     )
 
@@ -239,7 +224,6 @@ def link_cleaned(
     rules=None,
     salt: int = 1,
     threshold_match_weight: float = -50.0,
-    second_pass: bool = True,
     checkpointer=None,
 ) -> DataFrame:
     """block + score + rescore over ALREADY-CLEANED sides.
@@ -275,9 +259,9 @@ def link_cleaned(
     # one size-gate probe (two count jobs) serves both attach steps
     bcast = _sides_broadcastable(cl, cr)
     # score in COMPACT form (no display strings through the pair
-    # exchanges); when the second pass follows, the prune to exactly its
-    # candidate set (threshold -20 + top-5 per messy record) is FUSED
-    # into score_pairs, so only (ids, weight) cross the top-n window's
+    # exchanges) with the prune to exactly the second pass's candidate
+    # set (threshold -20 + top-5 per messy record) FUSED into
+    # score_pairs, so only (ids, weight) cross the top-n window's
     # exchange and nothing below the cut reaches the re-attach joins or
     # the pass-1 checkpoint
     pred = score_pairs(
@@ -286,33 +270,25 @@ def link_cleaned(
         cr,
         side.numeric_tf,
         threshold_match_weight=threshold_match_weight,
-        retain_matching_columns=not second_pass,
         attach_display=False,
-        prune_top_n=(
-            (PRUNE_MATCH_WEIGHT_THRESHOLD, PRUNE_TOP_N) if second_pass else None
-        ),
+        prune_top_n=(PRUNE_MATCH_WEIGHT_THRESHOLD, PRUNE_TOP_N),
         broadcast_sides=bcast,
     )
     pred = attach_display_columns(
-        pred, cl, cr, retain_matching_columns=not second_pass,
-        broadcast_sides=bcast,
+        pred, cl, cr, retain_matching_columns=False, broadcast_sides=bcast
     )
     if checkpointer is not None:
-        # the artifact NAME states its semantics: with a second pass the
-        # durable pass-1 output is the PRUNED rescoring candidate set
-        # (threshold -20 + top-5), not the full threshold predictions —
-        # a resume consumer must not mistake one for the other (the
-        # manifest format_version additionally refuses cross-version
-        # resume, checkpoint.FORMAT_VERSION)
-        pred = checkpointer.checkpoint(
-            pred, "pass1_candidates" if second_pass else "predictions_pass1"
-        )
+        # the artifact NAME states its semantics: the durable pass-1
+        # output is the PRUNED rescoring candidate set (threshold -20 +
+        # top-5), not the full threshold predictions (the manifest
+        # format_version refuses cross-version resume,
+        # checkpoint.FORMAT_VERSION)
+        pred = checkpointer.checkpoint(pred, "pass1_candidates")
     # no cache in the in-memory path: the second pass reads the
     # predictions exactly once (its own per_pair cache covers the
     # multi-branch reuse), so a pass-1 cache would only pay an extra
     # 10^6-row encode for nothing
-    if not second_pass:
-        return _tag_source_datasets(pred)
+    #
     # assume_pruned: score_pairs fused EXACTLY this threshold+top-n cut
     # above (prune_top_n uses the same constants), so the second pass's
     # idempotent re-prune — one exchange + window sort over the whole

@@ -11,16 +11,23 @@ pairs -> BF = m/u).
 
 match_weight = log2(prior odds) + sum(log2(BF_c)); p = 2^w / (1 + 2^w).
 
-Spark realisation: one wide projection computing all comparison BFs as
-when-cascades over the joined pair row; the 34-level histogram comparison
+Spark realisation (score_pairs), three steps: one projection per side
+builds the compact per-record comparison inputs, the numeric TF included;
+one join pair attaches both sides to the candidate ids; one kernel
+projection computes all comparison BFs as when-cascades over the joined
+pair row and the weight from them. The 34-level histogram comparison
 computes its product expression ONCE (let-bound) and buckets it with a
 when ladder — the reference re-inlines the product per level
-(splink_model.json:337-607), which we deliberately do not.
+(splink_model.json:337-607), which we deliberately do not. The threshold
+filter and the optional top-n prune run on the narrow (ids, weight) rows;
+match_probability is derived from the weight once, at the end.
 
 TF adjustment (Splink public semantics): on a matched level with
 tf_adjustment_column c and weight w, BF *= (u_level / tf(c))^w with
 tf = greatest(tf_l, tf_r) from the numeric-token TF table; no adjustment
 when the value is absent. (training.py:176-178, 242-244, 293-295, 302-304)
+The TF value belongs to a record, so it is looked up once per record on
+each side, not once per pair.
 """
 
 from __future__ import annotations
@@ -91,7 +98,7 @@ def _cascade(levels: list[tuple[Column, Column]]) -> Column:
 
 def _hist_prod_parallel_sql(prefix: str) -> str:
     """Intersection product over the PARALLEL-ARRAY histogram encoding
-    (see score_pairs._compact): per side ``{prefix}_tok`` array<bigint>
+    (see _side): per side ``{prefix}_tok`` array<bigint>
     (xxhash64 of tok, side-distinct), ``{prefix}_cnt`` array<bigint>,
     and on the LEFT side ``{prefix}_rf`` array<double> — the product
     reads only the left side's rel_freq (min-cnt exponent, left entry
@@ -160,7 +167,7 @@ def _bucket_sql(prod: str) -> str:
 @X.scoped
 def comparison_bf_sqls() -> dict[str, str]:
     """All 8 comparison BF expressions as SQL text over a suffixed pair of
-    COMPACT rows (see _compact): cols *_l/*_r, the per-record columns
+    COMPACT rows (see _side): cols *_l/*_r, the per-record columns
     ``__oac_sig``, ``__nt1_dg``, ``__th_*``/``__ch_*`` and
     ``__pc_area``/``__pc_in``, plus tf_numeric_token_{1,2,3}_{l,r}.
     Values equal :func:`_comparison_bfs_column_api` over the uncompacted
@@ -504,10 +511,6 @@ def _token_hist_levels() -> list[tuple[int, float]]:
     return data[::-1]
 
 
-def _suffix(df: DataFrame, suffix: str) -> DataFrame:
-    return df.select([F.col(c).alias(f"{c}{suffix}") for c in df.columns])
-
-
 def _sides_broadcastable(cleaned_l: DataFrame, cleaned_r: DataFrame) -> bool:
     """Size gate for broadcasting the side tables into pair-attach joins.
 
@@ -525,81 +528,76 @@ def _sides_broadcastable(cleaned_l: DataFrame, cleaned_r: DataFrame) -> bool:
     return cleaned_l.count() <= cap and cleaned_r.count() <= cap
 
 
-def _compact(df: DataFrame, keep: list[str], rf: bool = True) -> DataFrame:
-    """COMPACT one side's pair-shuffle payload. Every candidate pair (23M
-    at 250k docs) carries both sides' comparison inputs through two
-    exchanges, but only the ~5% surviving the threshold need display
-    columns — measured per-stage executor-CPU shows the attach/scoring
-    stages dominated by payload bytes (memory bandwidth) at high
-    parallelism:
+def _side(
+    cleaned: DataFrame, numeric_tf: DataFrame | None, suffix: str, rf: bool
+) -> DataFrame:
+    """One side's COMPACT, suffixed pair-join payload, built as one
+    projection per record. Every candidate pair (23M at 250k docs)
+    carries both sides' comparison inputs into the kernel, but only the
+    ~5% surviving the threshold need display columns — measured
+    per-stage executor-CPU shows the attach/scoring stages dominated by
+    payload bytes (memory bandwidth) at high parallelism. The blocking
+    key arrays (unusual_* bands) are not projected at all.
      - token histogram: tok -> xxhash64(tok), then split into PARALLEL
        primitive arrays (__th_tok array<bigint>, __th_cnt array<bigint>,
        __th_rf array<double> on the left side only — the intersection
-       product never reads the right side's rel_freq). Intersection
-       needs token EQUALITY only (collision odds inside one pair's
-       ~30-token vocabulary: ~2^-59); dense primitive arrays drop the
-       per-entry struct headers from the exchange and let the probe
-       short-circuit (array_position) instead of filtering.
+       product never reads the right side's rel_freq, so ``rf=False``
+       for the right/messy side). Intersection needs token EQUALITY only
+       (collision odds inside one pair's ~30-token vocabulary: ~2^-59);
+       dense primitive arrays drop the per-entry struct headers from the
+       join payload and let the probe short-circuit (array_position)
+       instead of filtering.
      - common-end histogram: same encoding (__ch_*; its BF is also
        intersection-only). The STRING form the second pass needs is
-       re-attached post-filter.
+       re-attached post-filter by attach_display_columns.
      - original_address_concat: replaced by a null-preserving xxhash64
        signature (__oac_sig); its BF is equality-only. Text re-attached
        post-filter.
-     - per-record precomputes the kernel compares instead of evaluating
-       per PAIR (__nt1_dg, __pc_area/__pc_in; see the comments below).
-
-    ``rf=False`` (the right/messy side): the product only ever reads the
-    LEFT side's rel_freq, so the right side doesn't ship one."""
-    out = df.select(keep)
+     - __nt1_dg: numeric_token_1's digit run, extracted once per record;
+       the n1 cascade's level 3 compares these instead of
+       regexp_extract-ing per pair — identical values, the regex runs n
+       times instead of n_pairs times.
+     - __pc_area/__pc_in: the postcode split once per record for the
+       postcode cascade's levels 5-6. Spark's split_part (StringSplitSQL)
+       routes through UTF8String.split -> String.split, which COMPILES A
+       java.util.regex Pattern on every call — JFR-profiled at ~25% of
+       the scoring stage's CPU when the four calls sat on the pair path
+       (evaluated for every pair whose equality/levenshtein levels miss,
+       i.e. most of them). Same values, including split_part's
+       ''-on-missing-part and NULL propagation.
+     - tf_numeric_token_{1,2,3}: the numeric TF belongs to the record, so
+       it is looked up here (attach_numeric_tf) rather than per pair;
+       all NULL (no adjustment) without a TF table.
+    """
+    s = suffix
+    cols = [
+        f"{c} AS {c}{s}"
+        for c in (
+            "unique_id", "numeric_token_1", "numeric_token_2", "numeric_token_3",
+            "postcode", "flat_positional", "flat_letter",
+        )
+    ]
+    parts = [("tok", "xxhash64({e}.tok)"), ("cnt", "{e}.cnt")]
+    if rf:
+        parts.append(("rf", "{e}.rel_freq"))
     for hist, pref in (
         ("token_rel_freq_arr_hist", "__th"),
         ("common_end_tokens_hist", "__ch"),
     ):
-        if hist not in out.columns:
-            continue
-        e1, e2, e3 = X.gensym("e"), X.gensym("e"), X.gensym("e")
-        out = out.withColumn(
-            f"{pref}_tok", F.expr(f"transform({hist}, {e1} -> xxhash64({e1}.tok))")
-        ).withColumn(
-            f"{pref}_cnt", F.expr(f"transform({hist}, {e2} -> {e2}.cnt)")
-        )
-        if rf:
-            out = out.withColumn(
-                f"{pref}_rf",
-                F.expr(f"transform({hist}, {e3} -> {e3}.rel_freq)"),
-            )
-        out = out.drop(hist)
-    if "numeric_token_1" in out.columns:
-        # digit run extracted once per record; the n1 cascade's level 3
-        # compares these instead of regexp_extract-ing per pair — the
-        # values are identical by construction, the regex runs n times
-        # instead of n_pairs times
-        out = out.withColumn(
-            "__nt1_dg",
-            F.expr("nullif(regexp_extract(numeric_token_1, '\\\\d+', 0), '')"),
-        )
-    if "postcode" in out.columns:
-        # postcode area/incode split once per record for the postcode
-        # cascade's levels 5-6. Spark's split_part (StringSplitSQL) routes
-        # through UTF8String.split -> String.split, which COMPILES A
-        # java.util.regex Pattern on every call — JFR-profiled at ~25% of
-        # the scoring stage's CPU when the four calls sat on the pair path
-        # (evaluated for every pair whose equality/levenshtein levels
-        # miss, i.e. most of them). Same values, including split_part's
-        # ''-on-missing-part and NULL propagation.
-        out = out.withColumn(
-            "__pc_area", F.expr("split_part(postcode, ' ', 1)")
-        ).withColumn("__pc_in", F.expr("split_part(postcode, ' ', 2)"))
-    if "original_address_concat" in out.columns:
-        out = out.withColumn(
-            "__oac_sig",
-            F.when(
-                F.col("original_address_concat").isNotNull(),
-                F.xxhash64("original_address_concat"),
-            ),
-        ).drop("original_address_concat")
-    return out
+        for part, body in parts:
+            e = X.gensym("e")
+            cols.append(f"transform({hist}, {e} -> {body.format(e=e)}) AS {pref}_{part}{s}")
+    cols += [
+        f"nullif(regexp_extract(numeric_token_1, '\\\\d+', 0), '') AS __nt1_dg{s}",
+        f"split_part(postcode, ' ', 1) AS __pc_area{s}",
+        f"split_part(postcode, ' ', 2) AS __pc_in{s}",
+        "CASE WHEN original_address_concat IS NOT NULL "
+        f"THEN xxhash64(original_address_concat) END AS __oac_sig{s}",
+    ]
+    if numeric_tf is None:
+        cols += [f"CAST(NULL AS double) AS tf_numeric_token_{k}{s}" for k in (1, 2, 3)]
+    side = cleaned.selectExpr(*cols)
+    return side if numeric_tf is None else attach_numeric_tf(side, numeric_tf, s)
 
 
 def attach_numeric_tf(df: DataFrame, numeric_tf: DataFrame, suffix: str) -> DataFrame:
@@ -630,59 +628,40 @@ def score_pairs(
 ) -> DataFrame:
     """(unique_id_l, unique_id_r) pairs -> scored prediction table.
 
+    Three steps: one projection per side (_side: the compact comparison
+    inputs plus the per-record numeric TF), the pair join that attaches
+    both sides to the ids AFTER pair dedup (ids only move through the
+    blocking shuffle), and one kernel projection computing all 8 BFs and
+    the weight. The threshold filter sits directly above it, over rows
+    narrowed to (ids, weight) — plus the bf_* columns under
+    ``retain_bf`` — so nothing else crosses the top-n window or reaches
+    the caller; match_probability is computed from the weight last.
+
     ``prune_top_n=(thr, n)``: the output is EXACTLY
     ``prune_candidates(full_output, thr, n)`` — weight > thr and rank <= n
     per messy record by (weight DESC, unique_id_l DESC) — fused here so
-    only (ids, weight) cross the top-n window's exchange. A two-stage
+    only the narrow rows cross the top-n window's exchange. A two-stage
     branch-and-bound kernel was measured and removed; OPTIMIZATION_r06.md
     §4 records why and when it would pay.
 
-    ``attach_display=False`` returns the COMPACT scored rows (ids,
-    weights, postcodes, numeric/flat tokens, packed histograms, __oac_sig
-    signatures) without the re-attach joins — for callers that prune
-    further before needing text columns (linkage prunes to the rescoring
-    candidate set first, then calls attach_display_columns).
-
-    Two hash joins attach the wide cleaned attributes AFTER pair dedup
-    (ids only move through the blocking shuffle), then one projection
-    computes all BFs and the weight; the threshold filter sits directly
-    above it so Catalyst can prune early.
+    ``attach_display=False`` returns the scored rows as they are (ids,
+    weight, probability, and bf_* under ``retain_bf``) — for callers that
+    prune further before needing text columns (linkage prunes to the
+    rescoring candidate set first, then calls attach_display_columns).
 
     ``retain_matching_columns`` mirrors the reference setting of the same
-    name (splink_model.py:36): False drops the compared attribute columns
-    from the OUTPUT (they are still read for scoring), keeping only ids,
-    weights, the address/postcode pair, and common_end_tokens_hist_r (the
-    second pass's inputs). Text/histogram columns in the output are
-    re-attached from the cleaned tables AFTER the threshold filter — the
-    pair exchanges carry only compact signatures (see _compact).
-    Materialising the full frame costs real time — the token-histogram
-    maps dominate the parquet encode of a pass-1 checkpoint — so drop them
-    when only the second pass consumes the output.
+    name (splink_model.py:36): False keeps only ids, weights, the
+    address/postcode pair and common_end_tokens_hist_r (the second pass's
+    inputs) in the output; True also re-attaches the compared attribute
+    columns. Either way they are re-attached from the cleaned tables
+    AFTER the threshold filter (attach_display_columns).
 
     ``broadcast_sides``: None probes the size gate (_sides_broadcastable,
     two count jobs); a caller that also calls attach_display_columns
     computes the decision once and passes it to both.
     """
-    # slim payload: blocking-key arrays (unusual_* bands) are not used by
-    # scoring or the second pass — dropping them shrinks the pair-attach
-    # shuffle by ~a third
-    scoring_cols = [
-        "unique_id",
-        "numeric_token_1",
-        "numeric_token_2",
-        "numeric_token_3",
-        "token_rel_freq_arr_hist",
-        "common_end_tokens_hist",
-        "postcode",
-        "original_address_concat",
-        "flat_positional",
-        "flat_letter",
-    ]
-    keep_l = [c for c in cleaned_l.columns if c in scoring_cols]
-    keep_r = [c for c in cleaned_r.columns if c in scoring_cols]
-
-    left = _suffix(_compact(cleaned_l, keep_l), "_l")
-    right = _suffix(_compact(cleaned_r, keep_r, rf=False), "_r")
+    left = _side(cleaned_l, numeric_tf, "_l", rf=True)
+    right = _side(cleaned_r, numeric_tf, "_r", rf=False)
     if broadcast_sides is None:
         broadcast_sides = _sides_broadcastable(cleaned_l, cleaned_r)
     if broadcast_sides:
@@ -708,16 +687,10 @@ def score_pairs(
             right.hint("shuffle_hash"), "unique_id_r"
         )
 
-    if numeric_tf is not None:
-        df = attach_numeric_tf(df, numeric_tf, "_l")
-        df = attach_numeric_tf(df, numeric_tf, "_r")
-    else:
-        for k in (1, 2, 3):
-            df = df.withColumn(f"tf_numeric_token_{k}_l", F.lit(None).cast("double"))
-            df = df.withColumn(f"tf_numeric_token_{k}_r", F.lit(None).cast("double"))
-
     bf_sqls = comparison_bf_sqls()
-    df = df.withColumns({name: F.expr(sql) for name, sql in bf_sqls.items()})
+    df = df.selectExpr(
+        "unique_id_l", "unique_id_r", *[f"{sql} AS {name}" for name, sql in bf_sqls.items()]
+    )
     log_sum = " + ".join(f"log2({name})" for name in bf_sqls)
     # Pin the weight projection: CollapseProject + PushDownPredicate would
     # otherwise inline the ENTIRE scoring expression tree into every
@@ -731,33 +704,16 @@ def score_pairs(
     # the kernel runs exactly once and consumers read the materialised
     # column. (A boolean guard like ``rand() >= -1`` does NOT survive:
     # Spark 4 folds out-of-range rand comparisons to literals.)
-    df = df.withColumn(
-        "match_weight",
-        F.expr(f"{X.d(PRIOR_LOG2_ODDS)} + {log_sum} + 0.0D * rand(7)"),
+    df = df.selectExpr(
+        "unique_id_l",
+        "unique_id_r",
+        *(bf_sqls if retain_bf else []),
+        f"{X.d(PRIOR_LOG2_ODDS)} + {log_sum} + 0.0D * rand(7) AS match_weight",
     )
     prune_thr, top_n = prune_top_n if prune_top_n is not None else (None, None)
     thr_parts = [t for t in (threshold_match_weight, prune_thr) if t is not None]
-    thr_eff = max(thr_parts) if thr_parts else None
-    prob_sql = "pow(2.0D, match_weight) / (1.0D + pow(2.0D, match_weight))"
-    narrow_prune = top_n is not None and not retain_bf and not attach_display
-    if not narrow_prune:
-        df = df.withColumn("match_probability", F.expr(prob_sql))
-    if thr_eff is not None:
-        df = df.filter(F.col("match_weight") > thr_eff)
-    if narrow_prune:
-        # NARROW the rows before the top-n window: the window's exchange
-        # + sort otherwise move/copy the full compact payload (packed
-        # histogram arrays, signatures — JFR showed UnsafeRow.copy inside
-        # the window-group-limit as ~10% of stage CPU) for rows of which
-        # only ~5% survive. Only (ids, weight) cross the exchange; the
-        # probability is recomputed from the weight after the cut (same
-        # expression — bit-identical), and every display/second-pass
-        # column is re-attached from the cleaned sides by
-        # attach_display_columns (which the linkage caller invokes after
-        # further pruning). Disabled under retain_bf (the BF columns must
-        # ride through) and attach_display (the re-attach there does not
-        # cover the matching columns).
-        df = df.select("unique_id_l", "unique_id_r", "match_weight")
+    if thr_parts:
+        df = df.filter(F.col("match_weight") > max(thr_parts))
     if top_n is not None:
         # Size the window's exchange by CORES, not bytes (same rationale
         # and same replace-not-add mechanics as the second pass's
@@ -769,25 +725,24 @@ def score_pairs(
         # window reuses the partitioning — keeps ~3 balanced waves per
         # core at any width, and (under a checkpointer) fans the pass-1
         # artifact into core-count-derived files so the next pass's scan
-        # parallelism follows too.
+        # parallelism follows too. The rows are narrow by now: the
+        # window's exchange + sort no longer copy the compact payload
+        # (JFR showed UnsafeRow.copy inside the window-group-limit as
+        # ~10% of stage CPU when they did).
         par = 3 * df.sparkSession.sparkContext.defaultParallelism
-        df = df.repartition(par, "unique_id_r")
         w = Window.partitionBy("unique_id_r").orderBy(
             F.desc("match_weight"), F.desc("unique_id_l")
         )
         df = (
-            df.withColumn("__rn_w", F.row_number().over(w))
+            df.repartition(par, "unique_id_r")
+            .withColumn("__rn_w", F.row_number().over(w))
             .filter(F.col("__rn_w") <= top_n)
             .drop("__rn_w")
         )
-    if narrow_prune:
-        df = df.withColumn("match_probability", F.expr(prob_sql))
-    df = df.drop(
-        "__nt1_dg_l", "__nt1_dg_r",
-        "__pc_area_l", "__pc_area_r", "__pc_in_l", "__pc_in_r",
+    df = df.withColumn(
+        "match_probability",
+        F.expr("pow(2.0D, match_weight) / (1.0D + pow(2.0D, match_weight))"),
     )
-    if not retain_bf:
-        df = df.drop(*[c for c in df.columns if c.startswith("bf_") or c.startswith("tf_numeric")])
     if attach_display:
         df = attach_display_columns(
             df, cleaned_l, cleaned_r, retain_matching_columns,
@@ -803,56 +758,34 @@ def attach_display_columns(
     retain_matching_columns: bool = True,
     broadcast_sides: bool | None = None,
 ) -> DataFrame:
-    """Re-attach the text/histogram columns the compact scored rows shed
-    (see score_pairs._compact): two narrow joins against the cleaned
-    tables. Call AFTER any filtering/pruning — at the linkage defaults,
-    the rescoring candidates are ~5% of the scored pairs, so attaching
-    late moves a fraction of the bytes that carrying display strings
-    through the pair exchanges would.
+    """Attach the text/histogram columns to score_pairs' (ids, weight,
+    probability) rows: two narrow joins against the cleaned tables. Call
+    AFTER any filtering/pruning — at the linkage defaults, the rescoring
+    candidates are ~5% of the scored pairs, so attaching late moves a
+    fraction of the bytes that carrying display strings through the pair
+    joins would.
 
     ``broadcast_sides``: None probes the same size gate as score_pairs
     (_sides_broadcastable); pass the already-computed decision to skip
     the two count jobs."""
     if broadcast_sides is None:
         broadcast_sides = _sides_broadcastable(cleaned_l, cleaned_r)
-    df = df.drop(
-        "__oac_sig_l", "__oac_sig_r",
-        "token_rel_freq_arr_hist_l", "token_rel_freq_arr_hist_r",
-        "common_end_tokens_hist_l", "common_end_tokens_hist_r",
-        *[
-            f"{p}_{part}_{s}"
-            for p in ("__th", "__ch")
-            for part in ("tok", "cnt", "rf")
-            for s in ("l", "r")
-        ],
-    )
 
     def _reatt(side_df: DataFrame, suffix: str, wanted: list[str]):
-        cols = [F.col("unique_id").alias(f"unique_id{suffix}")]
-        for c in wanted:
-            if c in side_df.columns:
-                cols.append(F.col(c).alias(f"{c}{suffix}"))
-        return side_df.select(cols)
+        return side_df.select(
+            F.col("unique_id").alias(f"unique_id{suffix}"),
+            *[F.col(c).alias(f"{c}{suffix}") for c in wanted],
+        )
 
-    want_l = ["original_address_concat"]
-    want_r = ["original_address_concat", "common_end_tokens_hist"]
+    want_l = ["original_address_concat", "postcode"]
+    want_r = ["original_address_concat", "common_end_tokens_hist", "postcode"]
     if retain_matching_columns:
-        want_l += ["common_end_tokens_hist", "token_rel_freq_arr_hist"]
-        want_r += ["token_rel_freq_arr_hist"]
-    # rows from score_pairs's narrow prune path carry only
-    # (ids, weight, probability) — re-attach whatever the output
-    # contract needs that the rows no longer have
-    if "postcode_l" not in df.columns:
-        want_l += ["postcode"]
-    if "postcode_r" not in df.columns:
-        want_r += ["postcode"]
-    if retain_matching_columns:
-        for c in ("numeric_token_1", "numeric_token_2", "numeric_token_3",
-                  "flat_positional", "flat_letter"):
-            if f"{c}_l" not in df.columns:
-                want_l.append(c)
-            if f"{c}_r" not in df.columns:
-                want_r.append(c)
+        matching = [
+            "numeric_token_1", "numeric_token_2", "numeric_token_3",
+            "flat_positional", "flat_letter", "token_rel_freq_arr_hist",
+        ]
+        want_l += matching + ["common_end_tokens_hist"]
+        want_r += matching
     if broadcast_sides:
         df = df.join(
             F.broadcast(_reatt(cleaned_l, "_l", want_l)), "unique_id_l"
