@@ -1,5 +1,6 @@
 """FP drill-down report (inspect.py port of accuracy_from_labels.py:30-291)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from uk_address_matcher_spark.best_match import best_matches_with_distinguishability
@@ -126,3 +127,32 @@ def test_pair_evidence_waterfall(spark):
     assert len(ev) == 9  # prior + 8 comparisons
     assert [r["seq"] for r in ev] == list(range(9))
     assert abs(ev[-1]["cumulative_log2"] - one["match_weight"]) < 1e-9
+
+
+@pytest.mark.parametrize("order", [["a", "b", "c"], ["b", "a", "c"], ["c", "b", "a"]])
+def test_tied_best_match_ignores_arrival_order(spark, order):
+    """Two candidates tie on the top weight: the best match is the lower
+    unique_id_l, its runner-up is the other tied candidate (so the
+    distinguishability is 0), and the drill-down agrees with it, in
+    whatever order the rows arrive."""
+    weights = {"a": 10.0, "b": 10.0, "c": 5.0}
+    pred = spark.createDataFrame(
+        [("r1", l, weights[l], f"{l} ST", "W1A") for l in order],
+        "unique_id_r string, unique_id_l string, match_weight double, "
+        "original_address_concat_l string, postcode_l string",
+    ).coalesce(1)
+    messy = spark.createDataFrame(
+        [("r1", "A ST", "W1A")], "unique_id string, address_concat string, postcode string"
+    )
+    best = [
+        (r["unique_id_l"], r["distinguishability"], r["distinguishability_category"])
+        for r in best_matches_with_distinguishability(pred, messy).collect()
+    ]
+    assert best == [("a", 0.0, "06.: Distinguishability = 0")]
+
+    with_dist = best_matches_with_distinguishability(pred, messy, best_match_only=False)
+    lab = spark.createDataFrame(
+        [("r1", "b")], "unique_id string, correct_unique_id string"
+    )
+    # the label names the tied runner-up, so the best match (a) is wrong
+    assert find_nth_false_positive(lab, with_dist, 1) == "r1"

@@ -140,3 +140,53 @@ def test_fused_side_tables_match_single_table_api(spark):
     cet = get_common_end_tokens(flat, min_share=0.03)
     assert cet[:3] == ["LONDON", "KEYNES", "LANE"]
     assert side.common_end_tokens == cet
+
+
+def test_output_independent_of_partitioning(spark):
+    """link_addresses gives the same rows, column for column, whatever
+    the input partitioning and shuffle width. Within one session
+    defaultParallelism is fixed (it sizes the top-n and pass-2
+    repartitions), so a local[2]-vs-local[8] comparison needs two
+    sessions and is not covered here."""
+    from uk_address_matcher_spark.corpus import (
+        domain_token_frequencies,
+        edge_case_flat_rows,
+    )
+    from uk_address_matcher_spark.linkage import build_side_tables, link_addresses
+
+    rows, _ = edge_case_flat_rows()
+    schema = (
+        "unique_id string, address_concat string, postcode string, "
+        "side string, test_block int"
+    )
+
+    def run(n_parts):
+        flat = spark.createDataFrame(rows, schema).repartition(n_parts)
+        canon = flat.filter(F.col("side") == "c").drop("side")
+        messy = flat.filter(F.col("side") == "m").drop("side")
+        side = build_side_tables(
+            spark, canon, rel_tok_freq=domain_token_frequencies(spark)
+        )
+        out = link_addresses(canon, messy, side, rules=block_on(["test_block"]))
+
+        def norm(v):
+            if isinstance(v, dict):
+                return tuple(sorted(v.items()))
+            return tuple(v) if isinstance(v, list) else v
+
+        return sorted(
+            (tuple(norm(v) for v in r) for r in out.collect()), key=repr
+        ), out.columns
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1")
+        narrow, cols_narrow = run(1)
+        spark.conf.set(key, "7")
+        wide, cols_wide = run(5)
+    finally:
+        spark.conf.set(key, before)
+    assert cols_narrow == cols_wide
+    assert len(narrow) > 0
+    assert narrow == wide

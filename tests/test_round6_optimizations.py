@@ -4,7 +4,8 @@
    the caller guarantees pruned input — outputs must be row-identical.
 2. The raw blocked-pairs durable checkpoint is gone: a checkpointed
    linkage writes exactly the compact pass set (resume boundary =
-   pass1_candidates), never a raw pair artifact.
+   pass1_candidates), never a raw pair artifact, and each pass keeps the
+   schema its checkpoint.FORMAT_VERSION promises.
 """
 
 from __future__ import annotations
@@ -24,6 +25,48 @@ from uk_address_matcher_spark.second_pass import (
     improve_predictions_using_distinguishing_tokens,
     prune_candidates,
 )
+
+
+_HIST = "array<struct<tok:string,cnt:bigint,rel_freq:double>>"
+_MAP = "map<string,bigint>"
+# the durable pass artifacts of a checkpointed edge-corpus linkage, as
+# recorded in the manifest (checkpoint.FORMAT_VERSION 4)
+PASS_SCHEMAS = {
+    "cleaned_all": (
+        "struct<unique_id:string,numeric_token_1:string,numeric_token_2:string,"
+        f"numeric_token_3:string,token_rel_freq_arr_hist:{_HIST},"
+        f"common_end_tokens_hist:{_HIST},postcode:string,"
+        "original_address_concat:string,flat_positional:string,"
+        "flat_letter:string,unusual_tokens_arr:array<string>,"
+        "very_unusual_tokens_arr:array<string>,"
+        "extremely_unusual_tokens_arr:array<string>,test_block:int,"
+        "__side:string>"
+    ),
+    "pass1_candidates": (
+        "struct<unique_id_r:string,unique_id_l:string,match_weight:double,"
+        "match_probability:double,original_address_concat_l:string,"
+        "postcode_l:string,original_address_concat_r:string,"
+        f"common_end_tokens_hist_r:{_HIST},postcode_r:string>"
+    ),
+    "pass2_per_pair": (
+        "struct<unique_id_r:string,unique_id_l:string,match_weight:double,"
+        "match_probability:double,original_address_concat_l:string,"
+        "original_address_concat_r:string,postcode_l:string,postcode_r:string,"
+        "tokens_l:array<string>,tokens_r:array<string>>"
+    ),
+    "predictions_pass2": (
+        "struct<unique_id_r:string,unique_id_l:string,"
+        "match_weight_original:double,match_probability:double,"
+        "original_address_concat_l:string,original_address_concat_r:string,"
+        f"postcode_l:string,postcode_r:string,overlapping_tokens_this_l_and_r:{_MAP},"
+        f"missing_tokens:array<string>,overlapping_bigrams_this_l_and_r:{_MAP},"
+        f"tokens_elsewhere_in_block_but_not_this:{_MAP},"
+        f"bigrams_elsewhere_in_block_but_not_this:{_MAP},"
+        f"overlapping_bigrams_this_l_and_r_filtered:{_MAP},"
+        f"bigrams_elsewhere_in_block_but_not_this_filtered:{_MAP},"
+        "mw_adjustment:double,match_weight:double>"
+    ),
+}
 
 
 def _edge_sides(spark):
@@ -82,6 +125,12 @@ def test_checkpointed_linkage_writes_no_raw_pair_artifact(spark, tmp_path):
     assert "blocked_pairs" not in passes
     assert {"cleaned_all", "pass1_candidates", "pass2_per_pair",
             "predictions_pass2"} <= passes
+    # a resume reads these artifacts back under the manifest's
+    # format_version: any change to a pass's columns must bump it
+    for name, schema in PASS_SCHEMAS.items():
+        assert ck.manifest["passes"][name]["schema"] == schema, (
+            f"{name}: pass schema changed: bump checkpoint.FORMAT_VERSION"
+        )
 
 
 def test_fused_disjointness_guard(spark):

@@ -84,3 +84,16 @@ def test_adjustment_arithmetic(spark):
     assert l1["overlapping_bigrams_this_l_and_r_filtered"] == {}
     assert abs(l1["mw_adjustment"] - 12.0) < 1e-9
     assert l1["match_weight"] == l1["match_weight_original"] + l1["mw_adjustment"]
+
+
+def test_each_pin_survives_optimisation_once(spark):
+    # every multi-consumer intermediate is pinned with a seeded rand
+    # (sqlexpr.pin); a lost pin lets Catalyst inline the intermediate into
+    # each consumer, so its seed would then appear 0 or several times
+    import re
+
+    df = _pairs(spark, "10 X Y Z", ["10 X Y Z", "9 X Y Z"])
+    out = improve_predictions_using_distinguishing_tokens(df, assume_pruned=True)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    counts = {seed: len(re.findall(rf"\brand\({seed}\)", plan)) for seed in range(11, 25)}
+    assert counts == {seed: 1 for seed in range(11, 25)}

@@ -54,7 +54,7 @@ def main() -> None:
     )
     from uk_address_matcher_spark.extract import extract_addresses
     from uk_address_matcher_spark.linkage import build_side_tables
-    from uk_address_matcher_spark.scoring import score_pairs
+    from uk_address_matcher_spark.scoring import attach_display_columns, score_pairs
     from uk_address_matcher_spark.second_pass import (
         improve_predictions_using_distinguishing_tokens,
     )
@@ -93,8 +93,16 @@ def main() -> None:
          "over (ids, weight) rows", plan_of(pruned))
     )
 
-    imp = improve_predictions_using_distinguishing_tokens(pred)
-    sections.append(("Second pass: top-k window + block aggregates", plan_of(imp)))
+    # the linkage path: display columns attached to the pruned rows, and
+    # the pass trusts score_pairs' cut (assume_pruned)
+    imp = improve_predictions_using_distinguishing_tokens(
+        attach_display_columns(pruned, cl, cr, retain_matching_columns=False),
+        assume_pruned=True,
+    )
+    sections.append(
+        ("Second pass, linkage path: per-pair, block and rescoring "
+         "projections", plan_of(imp))
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     knn = brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=3)

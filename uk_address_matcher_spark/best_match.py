@@ -23,14 +23,16 @@ def best_matches_with_distinguishability(
         thresholds.append(0)
     thres_sorted = sorted(thresholds, reverse=True)
 
-    w_order = Window.partitionBy("unique_id_r").orderBy(F.desc("match_weight"))
+    # one order for both the runner-up (lead) and the best row: under a
+    # tie on the top weight the runner-up is then the other tied row
+    # (distinguishability 0), whatever order the rows arrive in
     w_rank = Window.partitionBy("unique_id_r").orderBy(
         F.desc("match_weight"), F.asc("unique_id_l")
     )
     calc = (
         df_predict.withColumn(
             "distinguishability",
-            F.col("match_weight") - F.lead("match_weight").over(w_order),
+            F.col("match_weight") - F.lead("match_weight").over(w_rank),
         )
         .withColumn("match_count", F.count("*").over(Window.partitionBy("unique_id_r")))
         .withColumn("__rn", F.row_number().over(w_rank))

@@ -93,8 +93,11 @@ def find_nth_false_positive(
 ) -> str | None:
     """unique_id_r of the nth false positive (best match != label),
     ordered by unique_id_r for reproducible example selection
-    (accuracy_from_labels.py:60-85)."""
-    w = Window.partitionBy("unique_id_r").orderBy(F.desc("match_weight"))
+    (accuracy_from_labels.py:60-85). The best match breaks weight ties on
+    unique_id_l ASC, as evaluate.top_predictions does."""
+    w = Window.partitionBy("unique_id_r").orderBy(
+        F.desc("match_weight"), F.asc("unique_id_l")
+    )
     labeled = (
         df_predict_with_distinguishability.withColumn(
             "__rn", F.row_number().over(w)
@@ -145,7 +148,9 @@ def inspect_match_results_vs_labels(
     )
 
     # best match + distinguishability + true-match address
-    w = Window.partitionBy("unique_id_r").orderBy(F.desc("match_weight"))
+    w = Window.partitionBy("unique_id_r").orderBy(
+        F.desc("match_weight"), F.asc("unique_id_l")
+    )
     best = (
         df_predict_with_distinguishability.filter(F.col("unique_id_r") == target)
         .join(F.broadcast(lab), "unique_id_r", "left")

@@ -298,12 +298,6 @@ def link_cleaned(
     )
     if checkpointer is not None:
         improved = checkpointer.checkpoint(improved, "predictions_pass2")
-    return _tag_source_datasets(improved)
-
-
-def _tag_source_datasets(pred: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    return pred.withColumn("source_dataset_l", F.lit("c_")).withColumn(
-        "source_dataset_r", F.lit("m_")
+    return improved.selectExpr(
+        "*", "'c_' AS source_dataset_l", "'m_' AS source_dataset_r"
     )

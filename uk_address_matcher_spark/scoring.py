@@ -35,11 +35,12 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from uk_address_matcher_spark import sqlexpr as X
 from uk_address_matcher_spark.cleaning.steps import let
+from uk_address_matcher_spark.second_pass import prune_candidates
 
 PRIOR_P = 3e-8
 PRIOR_LOG2_ODDS = math.log2(PRIOR_P / (1 - PRIOR_P))
@@ -637,12 +638,12 @@ def score_pairs(
     ``retain_bf`` — so nothing else crosses the top-n window or reaches
     the caller; match_probability is computed from the weight last.
 
-    ``prune_top_n=(thr, n)``: the output is EXACTLY
-    ``prune_candidates(full_output, thr, n)`` — weight > thr and rank <= n
-    per messy record by (weight DESC, unique_id_l DESC) — fused here so
-    only the narrow rows cross the top-n window's exchange. A two-stage
-    branch-and-bound kernel was measured and removed; OPTIMIZATION_r06.md
-    §4 records why and when it would pay.
+    ``prune_top_n=(thr, n)``: the prune IS ``prune_candidates(df, thr, n)``
+    — weight > thr and rank <= n per messy record by (weight DESC,
+    unique_id_l DESC) — applied here to the narrow rows over a core-sized
+    repartition on unique_id_r, so only (ids, weight) cross the top-n
+    window's exchange. A two-stage branch-and-bound kernel was measured
+    and removed; OPTIMIZATION_r06.md §4 records why and when it would pay.
 
     ``attach_display=False`` returns the scored rows as they are (ids,
     weight, probability, and bf_* under ``retain_bf``) — for callers that
@@ -710,11 +711,9 @@ def score_pairs(
         *(bf_sqls if retain_bf else []),
         f"{X.d(PRIOR_LOG2_ODDS)} + {log_sum} + 0.0D * rand(7) AS match_weight",
     )
-    prune_thr, top_n = prune_top_n if prune_top_n is not None else (None, None)
-    thr_parts = [t for t in (threshold_match_weight, prune_thr) if t is not None]
-    if thr_parts:
-        df = df.filter(F.col("match_weight") > max(thr_parts))
-    if top_n is not None:
+    if threshold_match_weight is not None:
+        df = df.filter(F.col("match_weight") > threshold_match_weight)
+    if prune_top_n is not None:
         # Size the window's exchange by CORES, not bytes (same rationale
         # and same replace-not-add mechanics as the second pass's
         # per_pair repartition): the top-n window needs a hash exchange
@@ -730,15 +729,7 @@ def score_pairs(
         # (JFR showed UnsafeRow.copy inside the window-group-limit as
         # ~10% of stage CPU when they did).
         par = 3 * df.sparkSession.sparkContext.defaultParallelism
-        w = Window.partitionBy("unique_id_r").orderBy(
-            F.desc("match_weight"), F.desc("unique_id_l")
-        )
-        df = (
-            df.repartition(par, "unique_id_r")
-            .withColumn("__rn_w", F.row_number().over(w))
-            .filter(F.col("__rn_w") <= top_n)
-            .drop("__rn_w")
-        )
+        df = prune_candidates(df.repartition(par, "unique_id_r"), *prune_top_n)
     df = df.withColumn(
         "match_probability",
         F.expr("pow(2.0D, match_weight) / (1.0D + pow(2.0D, match_weight))"),

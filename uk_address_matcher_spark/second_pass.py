@@ -5,10 +5,21 @@ post_linkage/identify_distinguishing_tokens.py:4-443 (7 relational steps;
 tuning constants at lines 4-17). Sides follow the reference: l =
 canonical candidate, r = messy record.
 
-Spark plan shape: filter -> window top-k (one shuffle on unique_id_r) ->
-groupBy(unique_id_r) block aggregates (same key: no extra exchange under
-AQE) -> join aggregates back (same key) -> map algebra in one projection.
-Everything after the top-k is partition-local in unique_id_r.
+Spark plan shape: the threshold + top-n cut (prune_candidates: one
+shuffle on unique_id_r; linkage applies it inside score_pairs), then
+three stages of one projection each, all partition-local in unique_id_r:
+ - per pair (steps 3-4): strip common end tokens, tokenise both sides;
+ - per block (step 5): groupBy(unique_id_r) pools the block's tokens,
+   then one projection builds the block histograms and their overlap
+   with the messy record (same key: no extra exchange under AQE);
+ - rescoring (steps 6-8): join the block row back (same key), one
+   projection of the pinned intermediates and the weight adjustment,
+   and one output projection.
+The block and rescoring projections read columns defined earlier in the
+same select list (lateral column aliases: Spark >= 3.4, on by default
+via spark.sql.lateralColumnAlias.enableImplicitResolution); each
+multi-consumer intermediate is pinned (sqlexpr.pin) so Catalyst
+evaluates it once per row instead of inlining it into its consumers.
 
 Representation choices vs the reference:
  - bigrams are 'TOK1 TOK2' strings, not LIST<VARCHAR> map keys (Spark map
@@ -33,7 +44,7 @@ from pyspark.sql import functions as F
 from uk_address_matcher_spark import sqlexpr as X
 
 # pass-1 -> pass-2 candidate cut (reference
-# identify_distinguishing_tokens.py:8-9); linkage fuses this prune into
+# identify_distinguishing_tokens.py:8-9); linkage applies this prune in
 # score_pairs (prune_top_n), so the constants live here once
 PRUNE_MATCH_WEIGHT_THRESHOLD = -20.0
 PRUNE_TOP_N = 5
@@ -106,6 +117,25 @@ def _filter_map_keys(m: str, keys: str) -> str:
     )
 
 
+def _not_in(a: str, b: str) -> str:
+    # elements of array a absent from array b, in a's order
+    x = X.gensym("x")
+    return f"filter({a}, {x} -> NOT array_contains({b}, {x}))"
+
+
+def _bigrams_not_explained(bigram_map: str, unigram_map: str) -> str:
+    # keep bigram entries NOT already explained by both unigram counts
+    # (identify_distinguishing_tokens.py:328-361)
+    e = X.gensym("e")
+    l1 = f"try_element_at({unigram_map}, split_part({e}.key, ' ', 1))"
+    l2 = f"try_element_at({unigram_map}, split_part({e}.key, ' ', 2))"
+    explained = (
+        f"({l1} IS NOT NULL AND {l1} <= {e}.value "
+        f"AND {l2} IS NOT NULL AND {l2} <= {e}.value)"
+    )
+    return f"map_from_entries(filter(map_entries({bigram_map}), {e} -> NOT {explained}))"
+
+
 def _map_sum_inv_sq(m: str) -> str:
     # sum over map values of 1/v^2 (the reward kernel,
     # identify_distinguishing_tokens.py:384-387); 0 for empty/null maps
@@ -122,12 +152,13 @@ def prune_candidates(
     top_n_matches: int = PRUNE_TOP_N,
 ) -> DataFrame:
     """Steps 1-2 of the rescoring pass: threshold + top-n per messy record
-    (DESC weight, DESC id). Exposed separately so the linkage driver can
-    prune the scored pairs BEFORE display columns are attached and the
-    pass-1 checkpoint is written — everything below the threshold / rank
-    cut is unreachable by the second pass, so carrying it through the
-    re-attach joins and the durable checkpoint is pure waste (at 1M docs:
-    45.8M scored rows of which ~2.5M are rescoring candidates).
+    (DESC weight, DESC id) — the one top-n cut: score_pairs
+    (``prune_top_n``) applies it to the scored pairs BEFORE the linkage
+    driver attaches display columns and writes the pass-1 checkpoint.
+    Everything below the threshold / rank cut is unreachable by the
+    second pass, so carrying it through the re-attach joins and the
+    durable checkpoint is pure waste (at 1M docs: 45.8M scored rows of
+    which ~2.5M are rescoring candidates).
     Idempotent: applying it to already-pruned input is a no-op.
     """
     good = df_predict.filter(F.col("match_weight") > match_weight_threshold)
@@ -162,48 +193,38 @@ def improve_predictions_using_distinguishing_tokens(
         else prune_candidates(df_predict, match_weight_threshold, top_n_matches)
     )
 
-    # Step 3: strip up to 2 common end tokens (from the messy side's set).
-    # EFFECTIVE reference behaviour: only tokens_r sees the stripped text —
-    # the reference's step 4 (tokenise_r) reads FROM remove_common_end_tokens,
-    # but steps 5 and 6 read FROM top_n_matches, so tokens_l /
-    # tokens_in_block_l and the output original_address_concat_* are all
-    # built from the UN-stripped l side
-    # (identify_distinguishing_tokens.py:86-270).
-    cet_e = X.gensym("e")
-    top = top.withColumns(
-        {
-            "__cet_r": F.expr(
-                f"coalesce(transform(common_end_tokens_hist_r, "
-                f"{cet_e} -> {cet_e}.tok), cast(array() as array<string>))"
-            )
-        }
-    ).withColumn(
-        "addr_r_stripped",
-        F.expr(_strip_common_end("original_address_concat_r", "__cet_r")),
+    # Step 3-4, per pair: strip up to 2 common end tokens (the messy
+    # side's set) and tokenise both sides. EFFECTIVE reference behaviour:
+    # only tokens_r sees the stripped text — the reference's step 4
+    # (tokenise_r) reads FROM remove_common_end_tokens, but steps 5 and 6
+    # read FROM top_n_matches, so tokens_l / tokens_in_block_l and the
+    # output original_address_concat_* are all built from the UN-stripped
+    # l side (identify_distinguishing_tokens.py:86-270).
+    e = X.gensym("e")
+    cet_r = (
+        f"coalesce(transform(common_end_tokens_hist_r, {e} -> {e}.tok), "
+        f"cast(array() as array<string>))"
     )
-
-    # Step 4-5: per-block aggregates keyed by unique_id_r. The block
-    # histograms are computed ONCE PER BLOCK in the groupBy branch (a
-    # window formulation would recompute them once per member row —
-    # measured as the second-heaviest CPU stage in the pipeline and the
-    # worst memory-bandwidth inflator at high parallelism). per_pair is
-    # cached AND materialised (count) before fan-out: its two consumers
-    # (the groupBy branch and the join-back) would otherwise race to fill
-    # the cache inside one job, each recomputing the whole upstream
-    # scoring pipeline. The groupBy and join share the top-n window's
-    # unique_id_r hash partitioning, so neither adds an exchange.
+    addr_r_stripped = X.let(
+        cet_r, lambda c: _strip_common_end("original_address_concat_r", c)
+    )
     per_pair = top.selectExpr(
-        "unique_id_r",
-        "unique_id_l",
-        "match_weight",
-        "match_probability",
-        "original_address_concat_l",
-        "original_address_concat_r",
-        "postcode_l",
-        "postcode_r",
+        "unique_id_r", "unique_id_l", "match_weight", "match_probability",
+        "original_address_concat_l", "original_address_concat_r",
+        "postcode_l", "postcode_r",
         f"{_tokenise('original_address_concat_l', 'postcode_l')} AS tokens_l",
-        f"{_tokenise('addr_r_stripped', 'postcode_r')} AS tokens_r",
+        f"{_tokenise(addr_r_stripped, 'postcode_r')} AS tokens_r",
     )
+    # The block histograms are computed ONCE PER BLOCK in the groupBy
+    # branch below (a window formulation would recompute them once per
+    # member row — measured as the second-heaviest CPU stage in the
+    # pipeline and the worst memory-bandwidth inflator at high
+    # parallelism). per_pair is cached AND materialised (count) before
+    # fan-out: its two consumers (the groupBy branch and the join-back)
+    # would otherwise race to fill the cache inside one job, each
+    # recomputing the whole upstream scoring pipeline. The groupBy and
+    # join share the top-n window's unique_id_r hash partitioning, so
+    # neither adds an exchange.
     if checkpointer is not None:
         # under a checkpointer the barrier is DURABLE: the rescoring pass
         # becomes resumable mid-way (a kill between pass 1 and pass 2
@@ -227,6 +248,9 @@ def improve_predictions_using_distinguishing_tokens(
         per_pair = per_pair.cache()
         per_pair.count()
 
+    # Step 5, per block: the candidates' token pool, its token and bigram
+    # histograms, and their overlap with the messy record; the overlap
+    # maps read the pinned columns as lateral aliases (module docstring).
     s = X.gensym("s")
     block_aggs = (
         per_pair.groupBy("unique_id_r")
@@ -242,126 +266,20 @@ def improve_predictions_using_distinguishing_tokens(
             f"{X.pin(_hist('tokens_in_block_l'), 11)} AS hist_all_tokens_in_block_l",
             f"{X.pin(_hist(_bigrams('tokens_in_block_l')), 12)} AS hist_all_bigrams_in_block_l",
             f"{X.pin(_bigrams('tokens_r'), 20)} AS bigrams_r",
-            "tokens_r",
-        )
-        .selectExpr(
-            "unique_id_r",
-            "bigrams_r",
-            "hist_all_tokens_in_block_l",
-            "hist_all_bigrams_in_block_l",
             f"{_filter_map_keys('hist_all_tokens_in_block_l', 'tokens_r')}"
             " AS hist_overlapping_tokens_r_block_l",
             f"{_filter_map_keys('hist_all_bigrams_in_block_l', 'bigrams_r')}"
             " AS hist_overlapping_bigrams_r_block_l",
         )
     )
-    df = per_pair.join(block_aggs, "unique_id_r")
 
-    # Step 6: per-pair intermediates. Every map/array column below is
+    # Step 6-8, per pair again: (name, sql, pin seed) in dependency order —
+    # 6: per-pair intermediates, 7: elsewhere-in-block maps and
+    # unigram-explained bigram filtering, 8: the weight adjustment
+    # (identify_distinguishing_tokens.py:376-441). Every column here is
     # consumed by several later expressions — some inside HOF lambdas,
     # where an inlined definition would re-evaluate per ELEMENT — so each
     # is pinned (computed once per row, referenced thereafter).
-    t1, t2 = X.gensym("t"), X.gensym("t")
-    b1 = X.gensym("b")
-    df = df.withColumn("bigrams_l", F.expr(X.pin(_bigrams("tokens_l"), 21)))
-    df = df.withColumns(
-        {
-            "overlapping_tokens_this_l_and_r": F.expr(
-                X.pin(
-                    _filter_map_keys("hist_overlapping_tokens_r_block_l", "tokens_l"),
-                    13,
-                )
-            ),
-            "tokens_r_not_in_l": F.expr(
-                X.pin(
-                    f"filter(tokens_r, {t1} -> NOT array_contains(tokens_l, {t1}))",
-                    22,
-                )
-            ),
-            "missing_tokens": F.expr(
-                X.pin(
-                    f"filter(tokens_l, {t2} -> NOT array_contains(tokens_r, {t2}))",
-                    23,
-                )
-            ),
-            "overlapping_bigrams_this_l_and_r": F.expr(
-                X.pin(
-                    _filter_map_keys(
-                        "hist_overlapping_bigrams_r_block_l", "bigrams_l"
-                    ),
-                    15,
-                )
-            ),
-            "bigrams_r_not_in_l": F.expr(
-                X.pin(
-                    f"filter(bigrams_r, {b1} -> NOT array_contains(bigrams_l, {b1}))",
-                    24,
-                )
-            ),
-        }
-    )
-
-    # Step 7: elsewhere-in-block maps + unigram-explained bigram filtering
-    df = df.withColumns(
-        {
-            "tokens_elsewhere_in_block_but_not_this": F.expr(
-                X.pin(
-                    _filter_map_keys(
-                        "hist_all_tokens_in_block_l", "tokens_r_not_in_l"
-                    ),
-                    14,
-                )
-            ),
-            "bigrams_elsewhere_in_block_but_not_this": F.expr(
-                X.pin(
-                    _filter_map_keys(
-                        "hist_all_bigrams_in_block_l", "bigrams_r_not_in_l"
-                    ),
-                    16,
-                )
-            ),
-        }
-    )
-
-    def bigram_not_explained(bigram_map: str, unigram_map: str) -> str:
-        # keep bigram entries NOT already explained by both unigram counts
-        # (identify_distinguishing_tokens.py:328-361)
-        e = X.gensym("e")
-        l1 = f"try_element_at({unigram_map}, split_part({e}.key, ' ', 1))"
-        l2 = f"try_element_at({unigram_map}, split_part({e}.key, ' ', 2))"
-        explained = (
-            f"({l1} IS NOT NULL AND {l1} <= {e}.value "
-            f"AND {l2} IS NOT NULL AND {l2} <= {e}.value)"
-        )
-        return (
-            f"map_from_entries(filter(map_entries({bigram_map}), "
-            f"{e} -> NOT {explained}))"
-        )
-
-    df = df.withColumns(
-        {
-            "overlapping_bigrams_this_l_and_r_filtered": F.expr(
-                X.pin(
-                    bigram_not_explained(
-                        "overlapping_bigrams_this_l_and_r",
-                        "overlapping_tokens_this_l_and_r",
-                    ),
-                    17,
-                )
-            ),
-            "bigrams_elsewhere_in_block_but_not_this_filtered": F.expr(
-                X.pin(
-                    bigram_not_explained(
-                        "bigrams_elsewhere_in_block_but_not_this",
-                        "tokens_elsewhere_in_block_but_not_this",
-                    ),
-                    18,
-                )
-            ),
-        }
-    )
-
-    # Step 8: adjusted weight (identify_distinguishing_tokens.py:376-441)
     adj = (
         f"{_map_sum_inv_sq('overlapping_tokens_this_l_and_r')} * {X.d(REWARD_MULTIPLIER)}"
         f" - size(map_keys(tokens_elsewhere_in_block_but_not_this))"
@@ -372,25 +290,46 @@ def improve_predictions_using_distinguishing_tokens(
         f" - size(map_keys(bigrams_elsewhere_in_block_but_not_this_filtered))"
         f" * {X.d(BIGRAM_PUNISHMENT_MULTIPLIER)}"
     )
-
-    return (
-        df.withColumn("mw_adjustment", F.expr(X.pin(adj, 19)))
-        .withColumnRenamed("match_weight", "match_weight_original")
-        .withColumn(
-            "match_weight", F.col("match_weight_original") + F.col("mw_adjustment")
-        )
-        # output column set matches the reference's final `matches` table
-        # (identify_distinguishing_tokens.py:376-441): the block-level
-        # histogram maps are INTERMEDIATES there too — and they are the
-        # widest columns in the frame (every block's full token/bigram
-        # multiset duplicated onto each of its ~top_n candidate rows), so
-        # carrying them into the durable pass artifact multiplied the
-        # checkpoint encode and the memory traffic of the whole pass
-        .drop(
-            "tokens_l", "tokens_r", "bigrams_l", "bigrams_r",
-            "tokens_r_not_in_l", "bigrams_r_not_in_l",
-            "hist_all_tokens_in_block_l", "hist_all_bigrams_in_block_l",
-            "hist_overlapping_tokens_r_block_l",
-            "hist_overlapping_bigrams_r_block_l",
-        )
+    rescoring = [
+        ("bigrams_l", _bigrams("tokens_l"), 21),
+        ("overlapping_tokens_this_l_and_r",
+         _filter_map_keys("hist_overlapping_tokens_r_block_l", "tokens_l"), 13),
+        ("tokens_r_not_in_l", _not_in("tokens_r", "tokens_l"), 22),
+        ("missing_tokens", _not_in("tokens_l", "tokens_r"), 23),
+        ("overlapping_bigrams_this_l_and_r",
+         _filter_map_keys("hist_overlapping_bigrams_r_block_l", "bigrams_l"), 15),
+        ("bigrams_r_not_in_l", _not_in("bigrams_r", "bigrams_l"), 24),
+        ("tokens_elsewhere_in_block_but_not_this",
+         _filter_map_keys("hist_all_tokens_in_block_l", "tokens_r_not_in_l"), 14),
+        ("bigrams_elsewhere_in_block_but_not_this",
+         _filter_map_keys("hist_all_bigrams_in_block_l", "bigrams_r_not_in_l"), 16),
+        ("overlapping_bigrams_this_l_and_r_filtered",
+         _bigrams_not_explained("overlapping_bigrams_this_l_and_r",
+                                "overlapping_tokens_this_l_and_r"), 17),
+        ("bigrams_elsewhere_in_block_but_not_this_filtered",
+         _bigrams_not_explained("bigrams_elsewhere_in_block_but_not_this",
+                                "tokens_elsewhere_in_block_but_not_this"), 18),
+        ("mw_adjustment", adj, 19),
+    ]
+    rescored = per_pair.join(block_aggs, "unique_id_r").selectExpr(
+        "*", *[f"{X.pin(sql, seed)} AS {name}" for name, sql, seed in rescoring]
+    )
+    # output column set matches the reference's final `matches` table
+    # (identify_distinguishing_tokens.py:376-441): the tokens, bigrams and
+    # block-level histogram maps are INTERMEDIATES there too — and the
+    # histograms are the widest columns in the frame (every block's full
+    # token/bigram multiset duplicated onto each of its ~top_n candidate
+    # rows), so carrying them into the durable pass artifact multiplied
+    # the checkpoint encode and the memory traffic of the whole pass
+    return rescored.selectExpr(
+        "unique_id_r", "unique_id_l", "match_weight AS match_weight_original",
+        "match_probability", "original_address_concat_l",
+        "original_address_concat_r", "postcode_l", "postcode_r",
+        "overlapping_tokens_this_l_and_r", "missing_tokens",
+        "overlapping_bigrams_this_l_and_r",
+        "tokens_elsewhere_in_block_but_not_this",
+        "bigrams_elsewhere_in_block_but_not_this",
+        "overlapping_bigrams_this_l_and_r_filtered",
+        "bigrams_elsewhere_in_block_but_not_this_filtered",
+        "mw_adjustment", "match_weight + mw_adjustment AS match_weight",
     )
