@@ -3,7 +3,13 @@
 Captures .explain("formatted") for the engine's key operators and checks
 the properties that matter at 100 TB: parquet pushdown/pruning, broadcast
 vs shuffle join selection, whole-stage codegen coverage, exchange count.
-Planning only — no jobs are executed.
+
+Not planning only: building the inputs runs jobs. build_side_tables runs
+its one fused side-table collect, and the in-memory second pass runs
+``per_pair.count()``, which executes the uncached cleaning + blocking +
+scoring pipeline of the 1000-address grid corpus. The plans themselves are
+captured without executing them. Run from the repo root:
+``python tools/explain_audit.py``.
 """
 
 from __future__ import annotations
@@ -23,14 +29,23 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def plan_tree(plan: str) -> str:
+    """The operator tree of a formatted plan: the text before the first
+    numbered detail line ``(N) Operator``, which repeats every node."""
+    m = re.search(r"^\(\d+\) ", plan, re.M)
+    return plan if m is None else plan[: m.start()]
+
+
 def summarize(name: str, plan: str) -> str:
-    n_exchange = len(re.findall(r"\bExchange\b", plan))
-    n_wsc = len(re.findall(r"^\s*\* ", plan, re.M)) + len(re.findall(r"codegen id", plan))
+    tree = plan_tree(plan)
+    n_exchange = len(re.findall(r"\bExchange\b", tree))
+    # a whole-stage-codegen'd operator is marked "* " in the tree
+    n_wsc = len(re.findall(r"^[\s:+-]*\* ", tree, re.M))
     # NOTE: AQE plans print isFinalPlan=false before execution — codegen
     # annotations only appear on non-adaptive (or executed) plans
-    n_bhj = len(re.findall(r"BroadcastHashJoin", plan))
-    n_smj = len(re.findall(r"SortMergeJoin", plan))
-    n_shj = len(re.findall(r"ShuffledHashJoin", plan))
+    n_bhj = len(re.findall(r"BroadcastHashJoin", tree))
+    n_smj = len(re.findall(r"SortMergeJoin", tree))
+    n_shj = len(re.findall(r"ShuffledHashJoin", tree))
     pushed = re.findall(r"PushedFilters: \[[^\]]*\]", plan)
     schema = re.findall(r"ReadSchema: [^\n]*", plan)
     lines = [f"### {name}", "",

@@ -337,7 +337,9 @@ def add_term_frequencies_broadcast(df: DataFrame, rel_tok_freq: DataFrame) -> Da
     on Spark the idiomatic scale path is a broadcast lookup inside a
     vectorized UDF: zero shuffles, plan stays embarrassingly parallel.
     ~300k-token TF tables are a few tens of MB — well under broadcast
-    limits.
+    limits. When the TF table comes from linkage.build_side_tables (a
+    local relation, built by session.local_frame), the collect below
+    starts no Spark job.
     """
     import pandas as pd
     from pyspark.sql import types as T

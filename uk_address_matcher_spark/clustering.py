@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from uk_address_matcher_spark.session import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -213,7 +215,8 @@ def bipartite_components(
                     F.col("m").alias("node"), F.col("mlab").alias("lab")
                 ).unionByName(c_rows)
                 if root:
-                    remap = edges.sparkSession.createDataFrame(
+                    remap = local_frame(
+                        edges.sparkSession,
                         [(k, v) for k, v in root.items() if k != v],
                         "lab string, root string",
                     )

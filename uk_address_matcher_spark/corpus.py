@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from uk_address_matcher_spark.session import local_frame
+
 SPAN_TYPE = T.StructType(
     [
         T.StructField("kind", T.StringType()),
@@ -373,12 +375,14 @@ def to_documents(flat: DataFrame) -> DataFrame:
 def edge_case_documents(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     """The 21 labeled blocks as interleaved documents + labels."""
     addresses, labels = edge_case_flat_rows()
-    flat = spark.createDataFrame(
-        addresses, "unique_id string, address_concat string, postcode string, side string, test_block int"
+    flat = local_frame(
+        spark,
+        addresses,
+        "unique_id string, address_concat string, postcode string, side string, test_block int",
     )
     docs = to_documents(flat)
-    labels_df = spark.createDataFrame(
-        labels, "unique_id string, correct_unique_id string, test_block int"
+    labels_df = local_frame(
+        spark, labels, "unique_id string, correct_unique_id string, test_block int"
     )
     return docs, labels_df
 
@@ -678,6 +682,4 @@ def domain_token_frequencies(spark: SparkSession) -> DataFrame:
     best: dict[str, float] = {}
     for tok, f in rows:
         best[tok] = max(best.get(tok, 0.0), f)
-    return spark.createDataFrame(
-        sorted(best.items()), "token string, rel_freq double"
-    )
+    return local_frame(spark, sorted(best.items()), "token string, rel_freq double")

@@ -17,6 +17,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from uk_address_matcher_spark.session import local_frame
+
 # cleaned-table columns worth showing in the side-by-side panel
 # (accuracy_from_labels.py CLEANED_COLS_TO_SELECT)
 CLEANED_PANEL_COLS = [
@@ -70,7 +72,8 @@ def pair_evidence(
             f"stack({len(bf_cols)}, {stack_args}) as (comparison, bayes_factor)"
         )
     ).withColumn("log2_contribution", F.log2("bayes_factor"))
-    prior = row.sparkSession.createDataFrame(
+    prior = local_frame(
+        row.sparkSession,
         [("prior", float(2.0**PRIOR_LOG2_ODDS), float(PRIOR_LOG2_ODDS))],
         "comparison string, bayes_factor double, log2_contribution double",
     )

@@ -4,10 +4,15 @@ The side tables (token TF, numeric TF, common end tokens) are tiny (at
 most a few hundred thousand rows); they are materialised to the driver
 once and re-created as local DataFrames so their (full-cleaning-queue)
 plans are never re-executed by downstream broadcast joins — without this,
-every broadcast re-runs the generating pipeline. All three are computed
-by ONE Spark job (a tagged token union over the corpus): driver-side
-action barriers are fixed latency that does not shrink with cores, so
-they are the first thing scaling efficiency loses to.
+every broadcast re-runs the generating pipeline. "Local" is literal:
+session.local_frame plans them as a ``LocalRelation``, so collecting one
+(the TF dict of the cleaning UDF) starts no Spark job and broadcasting
+one (numeric TF in scoring) starts no Python workers; a frame built by
+``createDataFrame(list)`` is a Python RDD, and every scan of it is a job.
+All three are computed by ONE Spark job (a tagged token union over the
+corpus): driver-side action barriers are fixed latency that does not
+shrink with cores, so they are the first thing scaling efficiency loses
+to.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ from uk_address_matcher_spark.scoring import score_pairs
 from uk_address_matcher_spark.second_pass import (
     improve_predictions_using_distinguishing_tokens,
 )
+from uk_address_matcher_spark.session import local_frame
 
 
 @dataclass
@@ -119,7 +125,8 @@ def build_side_tables(
         by_kind[r["kind"]].append((r["token"], r["cnt"]))
 
     ntf_total = sum(c for _, c in by_kind["ntf"]) or 1
-    ntf = spark.createDataFrame(
+    ntf = local_frame(
+        spark,
         [(t, c / ntf_total) for t, c in by_kind["ntf"] if t is not None],
         "numeric_token string, tf_numeric_token double",
     )
@@ -134,7 +141,8 @@ def build_side_tables(
 
     if rel_tok_freq is None:
         tf_total = sum(c for _, c in by_kind["tf"]) or 1
-        tf = spark.createDataFrame(
+        tf = local_frame(
+            spark,
             [(t, c / tf_total) for t, c in by_kind["tf"] if t is not None],
             "token string, rel_freq double",
         )
@@ -157,7 +165,7 @@ def build_side_tables(
                 "relative frequency share in (0, 1] — normalise counts "
                 "before passing."
             )
-        tf = spark.createDataFrame(tf_rows, "token string, rel_freq double")
+        tf = local_frame(spark, tf_rows, "token string, rel_freq double")
     return SideTables(rel_tok_freq=tf, numeric_tf=ntf, common_end_tokens=cet)
 
 

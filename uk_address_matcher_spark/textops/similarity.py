@@ -20,6 +20,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from uk_address_matcher_spark.session import local_frame
+
 logger = logging.getLogger(__name__)
 
 DEFAULT_TARGET_BUCKET = 200
@@ -197,8 +199,8 @@ def lsh_buckets(
                 "this loses too much recall",
                 len(rows), sum(r["bucket_n"] for r in rows), max_bucket_size,
             )
-            local = df.sparkSession.createDataFrame(
-                rows, "band int, sig string, bucket_n bigint"
+            local = local_frame(
+                df.sparkSession, rows, "band int, sig string, bucket_n bigint"
             )
             out = out.join(F.broadcast(local), ["band", "sig"], "left_anti")
     return out
