@@ -22,6 +22,7 @@ from uk_address_matcher_spark.corpus import (
     domain_token_frequencies,
     edge_case_flat_rows,
 )
+from uk_address_matcher_spark.session import local_frame
 from uk_address_matcher_spark.textops.analysis import (
     LANG_MARKERS,
     STOPWORDS_EN,
@@ -41,7 +42,8 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 def _edge_flat(spark: SparkSession) -> DataFrame:
     rows, _ = edge_case_flat_rows()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "unique_id string, address_concat string, postcode string, side string, test_block int",
     )
@@ -364,14 +366,13 @@ ORDER BY unique_id
 
 
 def _q_addr_flat_parse(spark, sf_dir):
-    from uk_address_matcher_spark.cleaning.steps import (
-        parse_out_flat_position_and_letter,
-        upper_case_address_and_postcode,
-    )
+    from uk_address_matcher_spark.cleaning import steps as S
 
-    df = upper_case_address_and_postcode(_edge_flat(spark))
-    return parse_out_flat_position_and_letter(df).select(
-        "unique_id", "flat_positional", "flat_letter"
+    pos, letter = S.parse_out_flat_position_and_letter_sql(
+        S.upper_case_sql("address_concat")
+    )
+    return _edge_flat(spark).selectExpr(
+        "unique_id", f"{pos} AS flat_positional", f"{letter} AS flat_letter"
     ).orderBy("unique_id")
 
 
@@ -430,14 +431,13 @@ FROM nums ORDER BY unique_id
 
 
 def _q_addr_dupe_end(spark, sf_dir):
-    from uk_address_matcher_spark.cleaning.steps import remove_duplicate_end_tokens
+    from uk_address_matcher_spark.cleaning import steps as S
 
-    df = _edge_flat(spark).withColumn(
-        "address_concat",
-        F.regexp_replace(F.upper(F.trim(F.col("address_concat"))), r"\s+", " "),
+    addr = S.remove_multiple_spaces_sql(
+        S.upper_case_sql(S.trim_whitespace_sql("address_concat"))
     )
-    return remove_duplicate_end_tokens(df).select(
-        "unique_id", F.col("address_concat").alias("deduped")
+    return _edge_flat(spark).selectExpr(
+        "unique_id", f"{S.remove_duplicate_end_tokens_sql(addr)} AS deduped"
     ).orderBy("unique_id")
 
 

@@ -10,11 +10,10 @@ from pyspark.sql import functions as F
 
 from uk_address_matcher_spark.cleaning import steps as S
 from uk_address_matcher_spark.cleaning.pipeline import (
-    QUEUE_PRE_TF,
     clean_addresses,
     get_address_token_frequencies,
     get_common_end_tokens,
-    run_queue,
+    pre_tf_sql,
 )
 
 FLAT_CASES = [
@@ -34,9 +33,12 @@ def test_parse_out_flat_positional(spark):
     df = spark.createDataFrame(
         [(c[0],) for c in FLAT_CASES], "address_concat string"
     )
+    pos, letter = S.parse_out_flat_position_and_letter_sql("address_concat")
     out = {
         r["address_concat"]: (r["flat_positional"], r["flat_letter"])
-        for r in S.parse_out_flat_position_and_letter(df).collect()
+        for r in df.selectExpr(
+            "address_concat", f"{pos} AS flat_positional", f"{letter} AS flat_letter"
+        ).collect()
     }
     for addr, pos, letter in FLAT_CASES:
         assert out[addr] == (pos, letter), addr
@@ -57,9 +59,9 @@ DUP_END_CASES = [
 
 def test_remove_duplicate_end_tokens(spark):
     df = spark.createDataFrame([(c[0],) for c in DUP_END_CASES], "address_concat string")
-    out = {r[0]: r[0] for r in []}
-    res = S.remove_duplicate_end_tokens(
-        df.withColumn("orig", F.col("address_concat"))
+    res = df.selectExpr(
+        "address_concat AS orig",
+        f"{S.remove_duplicate_end_tokens_sql('address_concat')} AS address_concat",
     ).collect()
     got = {r["orig"]: r["address_concat"] for r in res}
     for inp, expected in DUP_END_CASES:
@@ -88,8 +90,9 @@ def test_clean_address_string_first_pass(spark):
     df = spark.createDataFrame(
         [(c[0],) for c in FIRST_PASS_CASES], "address_concat string"
     )
-    res = S.clean_address_string_first_pass(
-        df.withColumn("orig", F.col("address_concat"))
+    res = df.selectExpr(
+        "address_concat AS orig",
+        f"{S.clean_address_string_first_pass_sql('address_concat')} AS address_concat",
     ).collect()
     got = {r["orig"]: r["address_concat"] for r in res}
     for inp, expected in FIRST_PASS_CASES:
@@ -101,7 +104,12 @@ def test_postcode_canonicalisation(spark):
         [("SW1A2AA",), ("SW1A 2AA",), ("GIR0AA",), ("NOT A PC",)],
         "postcode string",
     ).withColumn("address_concat", F.lit("X"))
-    got = [r["postcode"] for r in S.canonicalise_postcode(df).collect()]
+    got = [
+        r["postcode"]
+        for r in df.selectExpr(
+            f"{S.canonicalise_postcode_sql('postcode')} AS postcode"
+        ).collect()
+    ]
     assert got == ["SW1A 2AA", "SW1A 2AA", "GIR 0AA", "NOT A PC"]
 
 
@@ -114,7 +122,7 @@ def test_numeric_token_split(spark):
         ],
         "unique_id string, address_concat string, postcode string",
     )
-    out = {r["unique_id"]: r for r in run_queue(df, QUEUE_PRE_TF).collect()}
+    out = {r["unique_id"]: r for r in df.selectExpr(*pre_tf_sql(df.columns)).collect()}
     # '92-92A' -> digit runs 2, 92, 92 -> three numeric tokens
     assert (
         out["u1"]["numeric_token_1"],
@@ -144,8 +152,11 @@ def test_tf_attachment_join_vs_broadcast_identical(spark):
     # the same pre-TF frame (tokens absent from the table take the default)
     df = _tiny_corpus(spark)
     tf = get_address_token_frequencies(df).filter(F.col("token") != "ACACIA")
-    pre_tf = run_queue(df, QUEUE_PRE_TF)
-    a = S.add_term_frequencies_broadcast(pre_tf, tf)
+    pre_tf = df.selectExpr(*pre_tf_sql(df.columns))
+    attach = S.term_frequency_udf(tf)
+    a = pre_tf.withColumn(
+        "token_rel_freq_arr", attach("address_without_numbers_tokenised")
+    ).drop("address_without_numbers_tokenised")
     b = S.add_term_frequencies(pre_tf, tf)
     ra = {r["unique_id"]: r.asDict() for r in a.collect()}
     rb = {r["unique_id"]: r.asDict() for r in b.collect()}

@@ -1,7 +1,9 @@
 """tools/explain_audit.py's plan summary, checked without starting a JVM.
 
 ``explain("formatted")`` prints each operator twice: once in the tree and
-once in the numbered detail section. The summary counts the tree only.
+once in the numbered detail section. The summary counts the tree only,
+and in it each node once: the final plan of an executed adaptive plan
+(not its initial plan), and a cached plan under its first scan only.
 """
 
 import importlib.util
@@ -90,3 +92,55 @@ def test_summarize_counts_each_operator_once():
     # scan details still come from the detail section
     assert "- PushedFilters: [IsNotNull(a)]" in summary
     assert "- ReadSchema: struct<a:string,b:string>" in summary
+
+
+CACHED_TWICE_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (16)
++- BroadcastHashJoin Inner BuildRight (15)
+   :- InMemoryTableScan (1)
+   :     +- InMemoryRelation (2)
+   :           +- AdaptiveSparkPlan (10)
+                  +- == Final Plan ==
+                     ResultQueryStage (6)
+                     +- * HashAggregate (5)
+                        +- ShuffleQueryStage (4), Statistics(sizeInBytes=1.0 KiB)
+                           +- Exchange (3)
+                              +- * Range (7)
+                  +- == Initial Plan ==
+                     HashAggregate (9)
+                     +- Exchange (8)
+                        +- Range (17)
+   +- BroadcastExchange (14)
+      +- InMemoryTableScan (11)
+            +- InMemoryRelation (12)
+                  +- AdaptiveSparkPlan (10)
+                     +- == Final Plan ==
+                        ResultQueryStage (6)
+                        +- * HashAggregate (5)
+                           +- ShuffleQueryStage (4), Statistics(sizeInBytes=1.0 KiB)
+                              +- Exchange (3)
+                                 +- * Range (7)
+                     +- == Initial Plan ==
+                        HashAggregate (9)
+                        +- Exchange (8)
+                           +- Range (17)
+
+
+(1) InMemoryTableScan
+Output [1]: [id#1L]
+
+(2) InMemoryRelation
+Arguments: [id#1L], StorageLevel(disk, memory, deserialized, 1 replicas)
+"""
+
+
+def test_executed_cache_counted_once_from_its_final_plan():
+    tree = explain_audit.counted_tree(CACHED_TWICE_PLAN)
+    assert "Initial Plan" not in tree
+    assert tree.count("HashAggregate") == 1
+    assert tree.rstrip().endswith("+- InMemoryRelation (12)")
+    summary = explain_audit.summarize("cached twice", CACHED_TWICE_PLAN)
+    assert (
+        "- exchanges: 1, codegen'd operators: 2, "
+        "joins: 1 broadcast / 0 shuffled-hash / 0 sort-merge"
+    ) in summary

@@ -35,7 +35,9 @@ def test_adjacency_feature(spark):
         ("u2", "FLAT 2 ACACIA AVENUE LONDON", "SW1A 2AA"),
         ("u3", "FLAT 3 ACACIA AVENUE LONDON", "SW1A 2AA"),
     ]
-    df = spark.createDataFrame(rows, "unique_id string, address_concat string, postcode string")
+    df = spark.createDataFrame(
+        rows, "unique_id string, original_address_concat string, postcode string"
+    )
     out = {
         r["unique_id"]: r
         for r in separate_distinguishing_start_tokens_wrt_adjacent_records(df).collect()

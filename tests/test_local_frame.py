@@ -19,10 +19,8 @@ from uk_address_matcher_spark.extract import extract_addresses
 from uk_address_matcher_spark.linkage import build_side_tables
 from uk_address_matcher_spark.session import local_frame
 
-PACKAGE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "uk_address_matcher_spark",
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = os.path.join(ROOT, "uk_address_matcher_spark")
 
 
 def _optimized_node(df) -> str:
@@ -111,10 +109,12 @@ def _create_dataframe_callers(path: str) -> list[str]:
 
 
 def test_create_dataframe_only_inside_local_frame():
-    """One implementation of 'frame from driver rows': no JVM needed."""
+    """One implementation of 'frame from driver rows', in the package and
+    in ``__spark_entry__.py``: no JVM needed."""
     found = {}
     for path in sorted(glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)):
         callers = _create_dataframe_callers(path)
         if callers:
             found[os.path.relpath(path, PACKAGE)] = callers
     assert found == {"session.py": ["local_frame"]}
+    assert _create_dataframe_callers(os.path.join(ROOT, "__spark_entry__.py")) == []

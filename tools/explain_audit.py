@@ -36,8 +36,30 @@ def plan_tree(plan: str) -> str:
     return plan if m is None else plan[: m.start()]
 
 
+def counted_tree(plan: str) -> str:
+    """The operator tree with each node once. An executed adaptive plan
+    prints its ``== Final Plan ==`` and its ``== Initial Plan ==``; only
+    the final plan is counted. A node printed again under the same
+    operator id (a cached plan, under every InMemoryTableScan of it) is
+    counted, with its subtree, where it is first printed."""
+    kept, seen, skip = [], set(), None
+    for line in plan_tree(plan).splitlines():
+        depth = len(line) - len(line.lstrip(" :|"))
+        if skip is not None and depth > skip:
+            continue
+        skip = None
+        node = re.search(r"\((\d+)\)", line)
+        if "== Initial Plan ==" in line or (node and node.group(1) in seen):
+            skip = depth
+            continue
+        if node:
+            seen.add(node.group(1))
+        kept.append(line)
+    return "\n".join(kept)
+
+
 def summarize(name: str, plan: str) -> str:
-    tree = plan_tree(plan)
+    tree = counted_tree(plan)
     n_exchange = len(re.findall(r"\bExchange\b", tree))
     # a whole-stage-codegen'd operator is marked "* " in the tree
     n_wsc = len(re.findall(r"^[\s:+-]*\* ", tree, re.M))

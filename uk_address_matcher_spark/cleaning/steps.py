@@ -1,13 +1,15 @@
-"""Address-cleaning steps as pure DataFrame -> DataFrame transformations.
+"""Address-cleaning steps as SQL-text builders.
 
-Each step re-expresses one cleaning stage of the reference pipeline
+Each builder re-expresses one cleaning step of the reference pipeline
 (/root/reference/uk_address_matcher/cleaning/cleaning_steps.py and
-regexes.py) as Catalyst expressions — no Python UDFs in the hot path.
-The whole queue fuses into a handful of whole-stage-codegen projections.
-Heavy expression trees are emitted as SQL text (one F.expr parse) rather
-than composed through the Column API, which costs a Py4J round-trip per
-operator node — see the sqlexpr module doc; the parsed trees are
-identical.
+regexes.py) as a Catalyst expression: input column names in, SQL text
+out — no Python UDFs in the hot path except the TF lookup. A step that
+yields several columns returns a tuple of SQL texts or a named_struct.
+cleaning.pipeline lists the builders as the items of one projection per
+stage, which fuse into a handful of whole-stage-codegen projections.
+SQL text costs one parse per projection, where the Column API costs a
+Py4J round-trip per operator node (sqlexpr module doc); the parsed trees
+are identical.
 
 Dialect notes (verified empirically against DuckDB 1.0):
  - DuckDB's RE2 silently NO-OPS on lookbehind and backreference patterns,
@@ -47,8 +49,8 @@ def let(value: Column, body) -> Column:
 # ---------------------------------------------------------------------------
 # String-level regex battery (reference: cleaning/regexes.py).
 # Each helper emits SQL text: building these trees through Py4J costs
-# milliseconds PER OPERATOR (sqlexpr module doc) and the cleaning queue is
-# rebuilt per linkage call.
+# milliseconds PER OPERATOR (sqlexpr module doc) and the cleaning
+# projections are rebuilt per linkage call.
 # ---------------------------------------------------------------------------
 
 
@@ -105,34 +107,29 @@ UK_POSTCODE_REGEX = r"^([A-Z]{1,2}\d[A-Z\d]?|GIR)\s*(\d[A-Z]{2})$"
 
 
 # ---------------------------------------------------------------------------
-# Step functions (reference: cleaning/cleaning_steps.py)
+# Step builders (reference: cleaning/cleaning_steps.py). Column names in,
+# SQL text out; cleaning.pipeline lists them as the items of one select
+# per stage.
 # ---------------------------------------------------------------------------
 
 
-def trim_whitespace_address_and_postcode(df: DataFrame) -> DataFrame:
-    # cleaning_steps.py:47-58
-    return df.withColumn("address_concat", F.trim("address_concat")).withColumn(
-        "postcode", F.trim("postcode")
-    )
+def trim_whitespace_sql(c: str) -> str:
+    # cleaning_steps.py:47-58 (address and postcode)
+    return f"trim({c})"
 
 
-def canonicalise_postcode(df: DataFrame) -> DataFrame:
+def canonicalise_postcode_sql(c: str) -> str:
     # cleaning_steps.py:61-90 — single space between outward/inward codes
-    return df.withColumn(
-        "postcode", F.regexp_replace(F.col("postcode"), UK_POSTCODE_REGEX, r"$1 $2")
-    )
+    return _rr(c, UK_POSTCODE_REGEX, r"$1 $2")
 
 
-def upper_case_address_and_postcode(df: DataFrame) -> DataFrame:
-    # cleaning_steps.py:20-31
-    return df.withColumn("address_concat", F.upper("address_concat")).withColumn(
-        "postcode", F.upper("postcode")
-    )
+def upper_case_sql(c: str) -> str:
+    # cleaning_steps.py:20-31 (address and postcode)
+    return f"upper({c})"
 
 
-def clean_address_string_first_pass(df: DataFrame) -> DataFrame:
+def clean_address_string_first_pass_sql(c: str) -> str:
     # cleaning_steps.py:93-119 — nested regex chain, same order
-    c = "address_concat"
     for fn in (
         remove_commas_periods_sql,
         remove_apostrophes_sql,
@@ -145,12 +142,13 @@ def clean_address_string_first_pass(df: DataFrame) -> DataFrame:
         remove_repeated_tokens_sql,
     ):
         c = fn(c)
-    return df.withColumn("address_concat", F.expr(f"trim({c})"))
+    return f"trim({c})"
 
 
-def remove_duplicate_end_tokens(df: DataFrame) -> DataFrame:
+def remove_duplicate_end_tokens_sql(c: str) -> str:
     # cleaning_steps.py:260-286. DuckDB [:-2] drops ONE trailing token,
-    # [:-3] drops TWO (verified).
+    # [:-3] drops TWO (verified). The result is the reference's
+    # original_address_concat (cleaning_steps.py:34-44).
     def dedupe(t: str) -> str:
         last = f"try_element_at({t}, -1)"
         last2 = f"try_element_at({t}, -2)"
@@ -172,14 +170,7 @@ def remove_duplicate_end_tokens(df: DataFrame) -> DataFrame:
 
     # let-bound: the token array (and transitively the upstream cleaning
     # chain) is evaluated once per row instead of ~12x
-    return df.withColumn(
-        "address_concat", F.expr(X.let("split(address_concat, ' ')", dedupe))
-    )
-
-
-def derive_original_address_concat(df: DataFrame) -> DataFrame:
-    # cleaning_steps.py:34-44 — snapshot after first-pass clean + dupe-end removal
-    return df.withColumn("original_address_concat", F.col("address_concat"))
+    return X.let(f"split({c}, ' ')", dedupe)
 
 
 FLOOR_POSITIONS_RE = (
@@ -190,105 +181,76 @@ LEADING_LETTER_RE = r"^\s*\d+([A-Za-z])\b"
 FLAT_NUMBER_RE = r"\b(FLAT|UNIT|APARTMENT)\s+(\S*\d\S*)\s+\S*\d\S*\b"
 
 
-def parse_out_flat_position_and_letter(df: DataFrame) -> DataFrame:
-    # cleaning_steps.py:122-169. NOTE: the reference extracts GROUP 1 of
-    # FLAT_NUMBER_RE — the keyword itself, not the number (verified against
-    # DuckDB); 'FLAT'/'UNIT' (len<=4) can therefore land in flat_letter.
-    # Reproduced faithfully for scoring parity.
-    addr = "address_concat"
+def parse_out_flat_position_and_letter_sql(addr: str) -> tuple[str, str]:
+    """(flat_positional, flat_letter). cleaning_steps.py:122-169. NOTE:
+    the reference extracts GROUP 1 of FLAT_NUMBER_RE — the keyword
+    itself, not the number (verified against DuckDB); 'FLAT'/'UNIT'
+    (len<=4) can therefore land in flat_letter. Reproduced faithfully
+    for scoring parity."""
     floor_pos = f"regexp_extract({addr}, {X.q(FLOOR_POSITIONS_RE)}, 1)"
     flat_letter = f"regexp_extract({addr}, {X.q(FLAT_LETTER_RE)}, 1)"
     leading_letter = f"regexp_extract({addr}, {X.q(LEADING_LETTER_RE)}, 1)"
     flat_number = f"regexp_extract({addr}, {X.q(FLAT_NUMBER_RE)}, 1)"
-    return df.withColumns(
-        {
-            "flat_positional": F.expr(f"nullif({floor_pos}, '')"),
-            "flat_letter": F.expr(
-                f"nullif(coalesce(nullif({flat_letter}, ''), "
-                f"nullif({leading_letter}, ''), "
-                f"CASE WHEN length({flat_number}) <= 4 THEN {flat_number} END), '')"
-            ),
-        }
+    return (
+        f"nullif({floor_pos}, '')",
+        f"nullif(coalesce(nullif({flat_letter}, ''), "
+        f"nullif({leading_letter}, ''), "
+        f"CASE WHEN length({flat_number}) <= 4 THEN {flat_number} END), '')",
     )
 
 
 NUMERIC_TOKEN_RE = r"\b(\d{1,5}-\d{1,5}|[A-Za-z]?\d{1,5}[A-Za-z]?)\b"
 
 
-def parse_out_numbers(df: DataFrame) -> DataFrame:
-    # cleaning_steps.py:172-211 — numeric tokens out of the address; if
-    # flat_letter is purely numeric the first numeric token is dropped
-    # (it duplicates the flat number).
-    def split_out(addr: str) -> str:
+def parse_out_numbers_sql(addr: str, flat_letter: str) -> str:
+    """struct<awn: address without numbers, nums: numeric tokens>.
+    cleaning_steps.py:172-211 — if flat_letter is purely numeric the
+    first numeric token is dropped (it duplicates the flat number)."""
+
+    def split_out(a: str) -> str:
         def pick(all_nums: str) -> str:
             digits_re = X.q(r"^\d+$")
             return (
-                f"CASE WHEN flat_letter IS NOT NULL AND "
-                f"flat_letter RLIKE {digits_re} "
+                f"CASE WHEN {flat_letter} IS NOT NULL AND "
+                f"{flat_letter} RLIKE {digits_re} "
                 f"THEN slice({all_nums}, 2, greatest(size({all_nums}) - 1, 0)) "
                 f"ELSE {all_nums} END"
             )
 
-        nums = X.let(
-            f"regexp_extract_all({addr}, {X.q(NUMERIC_TOKEN_RE)}, 0)", pick
-        )
+        nums = X.let(f"regexp_extract_all({a}, {X.q(NUMERIC_TOKEN_RE)}, 0)", pick)
         return (
-            f"named_struct('awn', regexp_replace({addr}, {X.q(NUMERIC_TOKEN_RE)}, ''), "
+            f"named_struct('awn', regexp_replace({a}, {X.q(NUMERIC_TOKEN_RE)}, ''), "
             f"'nums', {nums})"
         )
 
     # double let-binding: the (collapsed, regex-heavy) address expression
     # and the extract_all array are each evaluated once per row
-    df = df.withColumn("__nums", F.expr(X.let("address_concat", split_out)))
-    return df.withColumns(
-        {
-            "address_without_numbers": F.col("__nums")["awn"],
-            "numeric_tokens": F.col("__nums")["nums"],
-        }
-    ).drop("__nums")
+    return X.let(addr, split_out)
 
 
-def clean_address_string_second_pass(df: DataFrame) -> DataFrame:
+def clean_address_string_second_pass_sql(c: str) -> str:
     # cleaning_steps.py:214-228
-    return df.withColumn(
-        "address_without_numbers",
-        F.expr(f"trim({remove_multiple_spaces_sql('address_without_numbers')})"),
-    )
+    return f"trim({remove_multiple_spaces_sql(c)})"
 
 
-def split_numeric_tokens_to_cols(df: DataFrame) -> DataFrame:
-    # cleaning_steps.py:231-243 — digit runs only ('21A' -> '21'; '23-24' -> 23,24)
+def split_numeric_tokens_to_cols_sql(numeric_tokens: str) -> str:
+    """struct<n1, n2, n3>. cleaning_steps.py:231-243 — digit runs only
+    ('21A' -> '21'; '23-24' -> 23,24)."""
     digit_re = X.q(r"\d+")
-    digits = (
-        f"regexp_extract_all(array_join(numeric_tokens, ' '), {digit_re}, 0)"
-    )
-    split3 = X.let(
+    digits = f"regexp_extract_all(array_join({numeric_tokens}, ' '), {digit_re}, 0)"
+    return X.let(
         digits,
         lambda d: (
             f"named_struct('n1', try_element_at({d}, 1), "
             f"'n2', try_element_at({d}, 2), 'n3', try_element_at({d}, 3))"
         ),
     )
-    return (
-        df.withColumn("__d3", F.expr(split3))
-        .withColumns(
-            {
-                "numeric_token_1": F.col("__d3")["n1"],
-                "numeric_token_2": F.col("__d3")["n2"],
-                "numeric_token_3": F.col("__d3")["n3"],
-            }
-        )
-        .drop("numeric_tokens", "__d3")
-    )
 
 
-def tokenise_address_without_numbers(df: DataFrame) -> DataFrame:
+def tokenise_address_without_numbers_sql(c: str) -> str:
     # cleaning_steps.py:246-257
     ws_re = X.q(r"\s+")
-    return df.withColumn(
-        "address_without_numbers_tokenised",
-        F.expr(f"split(trim(address_without_numbers), {ws_re})"),
-    ).drop("address_without_numbers")
+    return f"split(trim({c}), {ws_re})"
 
 
 # ---------------------------------------------------------------------------
@@ -305,7 +267,7 @@ def add_term_frequencies(df: DataFrame, rel_tok_freq: DataFrame) -> DataFrame:
     re-assemble with array_sort(collect_list(struct(pos,...))) (collect_list
     alone is unordered). One shuffle on unique_id. Not on the pipeline
     path: it is the reference the tests hold the pipeline's shuffle-free
-    :func:`add_term_frequencies_broadcast` to.
+    :func:`term_frequency_udf` to.
     """
     exploded = df.select(
         "unique_id",
@@ -328,9 +290,10 @@ def add_term_frequencies(df: DataFrame, rel_tok_freq: DataFrame) -> DataFrame:
     return df.join(assembled, "unique_id").drop("address_without_numbers_tokenised")
 
 
-def add_term_frequencies_broadcast(df: DataFrame, rel_tok_freq: DataFrame) -> DataFrame:
-    """Shuffle-free TF attachment: broadcast the TF table as a dict into an
-    Arrow-batched pandas UDF and map each token array in place.
+def term_frequency_udf(rel_tok_freq: DataFrame):
+    """Shuffle-free TF attachment: the TF table, broadcast as a dict into
+    an Arrow-batched pandas UDF that maps each token array to
+    array<struct<tok, rel_freq>> in place.
 
     The reference needs a join because SQL has no broadcast-variable
     concept (cleaning_steps.py:337-342 + the re-assembly join at 360-366);
@@ -344,7 +307,7 @@ def add_term_frequencies_broadcast(df: DataFrame, rel_tok_freq: DataFrame) -> Da
     import pandas as pd
     from pyspark.sql import types as T
 
-    spark = df.sparkSession
+    spark = rel_tok_freq.sparkSession
     tf_map = {r["token"]: r["rel_freq"] for r in rel_tok_freq.collect()}
     btf = spark.sparkContext.broadcast(tf_map)
 
@@ -367,81 +330,57 @@ def add_term_frequencies_broadcast(df: DataFrame, rel_tok_freq: DataFrame) -> Da
             else [{"tok": t, "rel_freq": tf.get(t, default)} for t in arr]
         )
 
-    return df.withColumn(
-        "token_rel_freq_arr", attach(F.col("address_without_numbers_tokenised"))
-    ).drop("address_without_numbers_tokenised")
+    return attach
 
 
 # ---------------------------------------------------------------------------
-# Post-TF steps
+# Post-TF step builders
 # ---------------------------------------------------------------------------
 
 
-def move_common_end_tokens_to_field(df: DataFrame, end_tokens: list[str]) -> DataFrame:
-    # cleaning_steps.py:484-550 — common trailing tokens (e.g. LONDON) into
-    # their own field; the side table arrives as a small Python list and is
-    # inlined as an array literal (the reference cross-joins a 1-row table).
+def move_common_end_tokens_to_field_sql(arr: str, end_tokens: list[str]) -> str:
+    """struct<common, remaining>. cleaning_steps.py:484-550 — common
+    trailing tokens (e.g. LONDON) into their own field; the side table
+    arrives as a small Python list and is inlined as an array literal
+    (the reference cross-joins a 1-row table)."""
     end_lit = (
         "array(" + ", ".join(X.q(t) for t in end_tokens) + ")"
         if end_tokens
         else "cast(array() as array<string>)"
     )
 
-    def split_ends(arr: str) -> str:
+    def split_ends(a: str) -> str:
         x1, x2, i2 = X.gensym("x"), X.gensym("x"), X.gensym("i")
-        last3 = (
-            f"CASE WHEN size({arr}) >= 3 THEN slice({arr}, -3, 3) ELSE {arr} END"
-        )
-        common = (
-            f"filter({last3}, {x1} -> array_contains({end_lit}, {x1}.tok))"
-        )
+        last3 = f"CASE WHEN size({a}) >= 3 THEN slice({a}, -3, 3) ELSE {a} END"
+        common = f"filter({last3}, {x1} -> array_contains({end_lit}, {x1}.tok))"
         # DuckDB (x,i) is 1-based: `i > len-2` selects the last two
         # positions; 0-based equivalent: i >= size-2
         remaining = (
-            f"filter({arr}, ({x2}, {i2}) -> NOT ({i2} >= size({arr}) - 2 "
+            f"filter({a}, ({x2}, {i2}) -> NOT ({i2} >= size({a}) - 2 "
             f"AND array_contains({end_lit}, {x2}.tok)))"
         )
         return f"named_struct('common', {common}, 'remaining', {remaining})"
 
-    df = df.withColumn("__ends", F.expr(X.let("token_rel_freq_arr", split_ends)))
-    return df.withColumns(
-        {
-            "common_end_tokens": F.col("__ends")["common"],
-            "token_rel_freq_arr": F.col("__ends")["remaining"],
-        }
-    ).drop("__ends")
+    return X.let(arr, split_ends)
 
 
-def first_unusual_token(df: DataFrame) -> DataFrame:
+def first_unusual_token_sql(arr: str) -> str:
     # cleaning_steps.py:411-425
     x = X.gensym("x")
-    return df.withColumn(
-        "first_unusual_token",
-        F.expr(
-            f"try_element_at(filter(token_rel_freq_arr, "
-            f"{x} -> {x}.rel_freq < 0.001D), 1)"
-        ),
-    )
+    return f"try_element_at(filter({arr}, {x} -> {x}.rel_freq < 0.001D), 1)"
 
 
-def use_first_unusual_token_if_no_numeric_token(df: DataFrame) -> DataFrame:
-    # cleaning_steps.py:428-448
+def use_first_unusual_token_if_no_numeric_token_sql(
+    numeric_token_1: str, arr: str, first_unusual: str
+) -> tuple[str, str]:
+    """(numeric_token_1, token array). cleaning_steps.py:428-448."""
     x = X.gensym("x")
-    new_num1 = (
-        "CASE WHEN numeric_token_1 IS NULL THEN first_unusual_token.tok "
-        "ELSE numeric_token_1 END"
-    )
-    new_arr = (
-        f"CASE WHEN numeric_token_1 IS NULL THEN "
-        f"filter(token_rel_freq_arr, {x} -> "
-        f"coalesce({x}.tok != first_unusual_token.tok, true)) "
-        f"ELSE token_rel_freq_arr END"
-    )
     return (
-        df.withColumn("__n1", F.expr(new_num1))
-        .withColumn("token_rel_freq_arr", F.expr(new_arr))
-        .drop("numeric_token_1", "first_unusual_token")
-        .withColumnRenamed("__n1", "numeric_token_1")
+        f"CASE WHEN {numeric_token_1} IS NULL THEN {first_unusual}.tok "
+        f"ELSE {numeric_token_1} END",
+        f"CASE WHEN {numeric_token_1} IS NULL THEN "
+        f"filter({arr}, {x} -> coalesce({x}.tok != {first_unusual}.tok, true)) "
+        f"ELSE {arr} END",
     )
 
 
@@ -454,8 +393,9 @@ def _sorted_by_freq_sql(arr: str) -> str:
     )
 
 
-def separate_unusual_tokens(df: DataFrame) -> DataFrame:
-    # cleaning_steps.py:553-582 — rarity bands, ordered by rel_freq asc
+def separate_unusual_tokens_sql(arr: str) -> str:
+    """struct<unusual, very_unusual, extremely_unusual>.
+    cleaning_steps.py:553-582 — rarity bands, ordered by rel_freq asc."""
 
     def bands(sorted_arr: str) -> str:
         def band(lo: float | None, hi: float | None) -> str:
@@ -476,16 +416,7 @@ def separate_unusual_tokens(df: DataFrame) -> DataFrame:
             f"'extremely_unusual', {band(None, 1e-7)})"
         )
 
-    df = df.withColumn(
-        "__bands", F.expr(X.let(_sorted_by_freq_sql("token_rel_freq_arr"), bands))
-    )
-    return df.withColumns(
-        {
-            "unusual_tokens_arr": F.col("__bands")["unusual"],
-            "very_unusual_tokens_arr": F.col("__bands")["very_unusual"],
-            "extremely_unusual_tokens_arr": F.col("__bands")["extremely_unusual"],
-        }
-    ).drop("__bands")
+    return X.let(_sorted_by_freq_sql(arr), bands)
 
 
 def _histogram_arr_sql(arr: str) -> str:
@@ -526,7 +457,8 @@ def separate_distinguishing_start_tokens_wrt_adjacent_records(
     df: DataFrame, partition_col: str | None = None
 ) -> DataFrame:
     """Split each address into tokens unique to it vs tokens shared with
-    its neighbours when sorted by reverse(address_concat).
+    its neighbours when sorted by reverse(original_address_concat) — the
+    reference's address_concat at this point of its queue.
 
     Faithful to the reference including its off-by-one (the correlated
     max(i) understates the true common-suffix length by one when the whole
@@ -542,15 +474,14 @@ def separate_distinguishing_start_tokens_wrt_adjacent_records(
 
     remove_lit = F.array(*[F.lit(t) for t in _ADJ_REMOVE])
     toks = F.filter(
-        F.split(F.col("address_concat"), r"\s+"),
+        F.split(F.col("original_address_concat"), r"\s+"),
         lambda x: ~F.array_contains(remove_lit, x),
     )
+    reversed_address = F.reverse(F.col("original_address_concat"))
     if partition_col is None:
-        w = Window.orderBy(F.reverse(F.col("address_concat")))
+        w = Window.orderBy(reversed_address)
     else:
-        w = Window.partitionBy(partition_col).orderBy(
-            F.reverse(F.col("address_concat"))
-        )
+        w = Window.partitionBy(partition_col).orderBy(reversed_address)
     df = (
         df.withColumn("__toks_adj", toks)
         .withColumn("__prev", F.lag("__toks_adj").over(w))
@@ -630,21 +561,3 @@ FINAL_COLUMNS = [
     "very_unusual_tokens_arr",
     "extremely_unusual_tokens_arr",
 ]
-
-
-def final_column_order(df: DataFrame) -> DataFrame:
-    # cleaning_steps.py:451-481 — histograms + canonical column order;
-    # extra user columns pass through after the contract columns
-    df = df.withColumns(
-        {
-            "token_rel_freq_arr_hist": F.expr(_histogram_arr_sql("token_rel_freq_arr")),
-            "common_end_tokens_hist": F.expr(_histogram_arr_sql("common_end_tokens")),
-        }
-    )
-    extra = [
-        c
-        for c in df.columns
-        if c not in FINAL_COLUMNS
-        and c not in ("token_rel_freq_arr", "common_end_tokens", "address_concat")
-    ]
-    return df.select(*FINAL_COLUMNS, *extra)

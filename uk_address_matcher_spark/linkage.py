@@ -2,15 +2,15 @@
 
 The side tables (token TF, numeric TF, common end tokens) are tiny (at
 most a few hundred thousand rows); they are materialised to the driver
-once and re-created as local DataFrames so their (full-cleaning-queue)
-plans are never re-executed by downstream broadcast joins — without this,
+once and re-created as local DataFrames so their (cleaning) plans are
+never re-executed by downstream broadcast joins — without this,
 every broadcast re-runs the generating pipeline. "Local" is literal:
 session.local_frame plans them as a ``LocalRelation``, so collecting one
 (the TF dict of the cleaning UDF) starts no Spark job and broadcasting
 one (numeric TF in scoring) starts no Python workers; a frame built by
 ``createDataFrame(list)`` is a Python RDD, and every scan of it is a job.
-All three are computed by ONE Spark job (a tagged token union over the
-corpus): driver-side action barriers are fixed latency that does not
+All three are computed by ONE Spark job (one tagged token projection
+over the corpus): driver-side action barriers are fixed latency that does not
 shrink with cores, so they are the first thing scaling efficiency loses
 to.
 """
@@ -50,14 +50,13 @@ def build_side_tables(
     clean_data_using_precomputed_rel_tok_freq path; when None, TF is
     computed from the corpus itself (clean_data_on_the_fly path).
 
-    One fused job: the token-TF, numeric-TF and common-end-token branches
-    are unioned as tagged (kind, token) rows, grouped once, and collected
-    once — replacing four serial driver actions (token TF, numeric TF,
-    common-end count + collect), each of which re-ran part of the
-    cleaning queue as its own job. Branch semantics are identical to
-    cleaning.pipeline.get_address_token_frequencies /
-    get_numeric_term_frequencies / get_common_end_tokens (which remain
-    the single-table public API).
+    One fused job: one projection over the corpus tags each token with
+    the side table that counts it (cleaning.pipeline.side_table_tokens,
+    which evaluates the first-pass regex chain once per row for all
+    three), one explode, one groupBy(kind, token), one collect. The
+    single-table public API (cleaning.pipeline.get_address_token_frequencies
+    / get_numeric_term_frequencies / get_common_end_tokens) reads the
+    same token projection.
 
     ``max_side_rows`` caps the driver collect: address vocabularies are
     bounded (a few hundred thousand tokens), but a generic corpus with
@@ -65,50 +64,13 @@ def build_side_tables(
     the cap the build fails loudly naming the fix.
     """
     from uk_address_matcher_spark.cleaning import pipeline as P
-    from uk_address_matcher_spark.cleaning import steps as S
 
-    branches = []
-
-    ntf_prep = P.run_queue(corpus_flat, P.NUMERIC_TF_QUEUE)
-    branches.append(
-        ntf_prep.select(
-            F.lit("ntf").alias("kind"),
-            F.explode("numeric_tokens").alias("token"),
-        )
+    kinds = ("ntf", "cet") if rel_tok_freq is not None else P.SIDE_TABLE_KINDS
+    counts = (
+        P.side_table_tokens(corpus_flat, kinds)
+        .groupBy("kind", "token")
+        .agg(F.count("*").alias("cnt"))
     )
-
-    # common-end branch: full linkage-prep queue; NULL last tokens are
-    # kept so the collected counts also carry the corpus row count that
-    # the share threshold needs
-    cet_prep = P.run_queue(corpus_flat, P.QUEUE_PRE_TF)
-    branches.append(
-        cet_prep.select(
-            F.lit("cet").alias("kind"),
-            F.try_element_at(
-                "address_without_numbers_tokenised", F.lit(-1)
-            ).alias("token"),
-        )
-    )
-
-    if rel_tok_freq is None:
-        tf_prep = P.run_queue(corpus_flat, P.TOKEN_TF_QUEUE)
-        all_tokens = F.concat(
-            F.filter(
-                F.array("numeric_token_1", "numeric_token_2", "numeric_token_3"),
-                lambda x: x.isNotNull(),
-            ),
-            F.col("address_without_numbers_tokenised"),
-        )
-        branches.append(
-            tf_prep.select(
-                F.lit("tf").alias("kind"), F.explode(all_tokens).alias("token")
-            )
-        )
-
-    unioned = branches[0]
-    for b in branches[1:]:
-        unioned = unioned.unionByName(b)
-    counts = unioned.groupBy("kind", "token").agg(F.count("*").alias("cnt"))
     rows = counts.limit(max_side_rows + 1).collect()
     if len(rows) > max_side_rows:
         raise ValueError(
@@ -131,13 +93,7 @@ def build_side_tables(
         "numeric_token string, tf_numeric_token double",
     )
 
-    n_rows = sum(c for _, c in by_kind["cet"])
-    cet_floor = max(int(n_rows * common_end_min_share), 3)
-    cet = [
-        t
-        for t, c in sorted(by_kind["cet"], key=lambda x: (-x[1], x[0] or ""))
-        if t is not None and t != "" and c > cet_floor
-    ]
+    cet = P.common_end_tokens_from_counts(by_kind["cet"], common_end_min_share)
 
     if rel_tok_freq is None:
         tf_total = sum(c for _, c in by_kind["tf"]) or 1

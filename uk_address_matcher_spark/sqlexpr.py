@@ -69,6 +69,11 @@ def q(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def ident(name: str) -> str:
+    """Quoted column name: any name, including one with dots or spaces."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def let(value: str, body) -> str:
     """Bind ``value`` once, use it many times inside ``body``.
 

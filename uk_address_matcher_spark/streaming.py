@@ -4,8 +4,8 @@ micro-batch linkage against a static canonical table.
 The reference is a batch engine (no streaming surface); this module is the
 north-rule value-add for continuous pipelines: new messy addresses arrive
 as files (the standard landing-zone pattern), are cleaned with the SAME
-pure-projection cleaning queue the batch path uses, and are either
-persisted or linked per micro-batch.
+cleaning projections the batch path uses (one per stage, no shuffle),
+and are either persisted or linked per micro-batch.
 
 Design notes for scale:
  - cleaning is stateless per-row (pure Catalyst projections + a broadcast
