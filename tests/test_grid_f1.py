@@ -2,6 +2,8 @@
 (BASELINE.json target) with the full 18-rule blocking and the domain TF
 table — the reference's precomputed-TF path."""
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -49,6 +51,29 @@ def test_golden_output_pin(spark, grid_run):
         F.sum(F.col("match_weight").cast("decimal(38,9)")).alias("s"),
     ).collect()[0]
     assert (r["n"], str(r["s"])) == (GOLDEN_PREDICTIONS, GOLDEN_WEIGHT_SUM)
+
+
+# full-row pin: the row count and the md5 over every column of every
+# sorted row, maps as sorted item lists and doubles by exact repr — the
+# weight checksum above cannot see the second pass's map columns
+GOLDEN_ROWS_MD5 = "31708d353adc45586f4e7c19b598e14d"
+
+
+def _rows_digest(df) -> tuple[int, str]:
+    def canon(v):
+        if isinstance(v, dict):
+            return sorted((k, canon(x)) for k, x in v.items())
+        if isinstance(v, (list, tuple)):
+            return [canon(x) for x in v]
+        return v
+
+    rows = sorted(repr([canon(v) for v in r]) for r in df.collect())
+    return len(rows), hashlib.md5("\n".join(rows).encode()).hexdigest()
+
+
+def test_golden_full_rows(spark, grid_run):
+    _, improved = grid_run
+    assert _rows_digest(improved) == (GOLDEN_PREDICTIONS, GOLDEN_ROWS_MD5)
 
 
 def test_postcode_locality_same_output(spark, grid_inputs, grid_run):

@@ -97,3 +97,23 @@ def test_each_pin_survives_optimisation_once(spark):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     counts = {seed: len(re.findall(rf"\brand\({seed}\)", plan)) for seed in range(11, 25)}
     assert counts == {seed: 1 for seed in range(11, 25)}
+
+
+def test_in_memory_pass_is_lazy_and_joinless(spark):
+    # the block's pair rows are nested into the block aggregate and
+    # unnested, so building the in-memory pass runs no job, persists
+    # nothing, and plans no join back onto the pairs
+    sc = spark.sparkContext
+    df = _pairs(spark, "10 X Y Z", ["10 X Y Z", "9 X Y Z"])
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+    group = "second_pass_build"
+    sc.setJobGroup(group, "build the in-memory second pass")
+    try:
+        out = improve_predictions_using_distinguishing_tokens(df, assume_pruned=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    nodes = [line.lstrip(" :+-") for line in plan.splitlines()]
+    assert not [n for n in nodes if n.startswith("Join ")], plan

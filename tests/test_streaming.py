@@ -125,6 +125,7 @@ def test_stream_link_cleans_canonical_once(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(streaming_mod, "clean_addresses", counting_clean)
 
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
     stream = read_address_stream(spark, in_dir + "/a", max_files_per_trigger=1)
     q = stream_link_addresses(
         stream, canon, side, str(tmp_path / "pred2"), str(tmp_path / "ckpt3"),
@@ -138,6 +139,8 @@ def test_stream_link_cleans_canonical_once(spark, tmp_path, monkeypatch):
     # 1 canonical clean + 1 per non-empty batch
     assert len(calls) == 1 + n_batches
     assert calls[0] is canon
+    # per-batch caches are released: only the cached canonical side stays
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) - persisted <= 1
 
 
 def test_arrival_stats_plan_is_streaming(spark, tmp_path):

@@ -5,10 +5,10 @@ the properties that matter at 100 TB: parquet pushdown/pruning, broadcast
 vs shuffle join selection, whole-stage codegen coverage, exchange count.
 
 Not planning only: building the inputs runs jobs. build_side_tables runs
-its one fused side-table collect, and the in-memory second pass runs
-``per_pair.count()``, which executes the uncached cleaning + blocking +
-scoring pipeline of the 1000-address grid corpus. The plans themselves are
-captured without executing them. Run from the repo root:
+its one fused side-table collect, and each score_pairs /
+attach_display_columns call counts both cleaned sides of the
+1000-address grid corpus for its broadcast size gate. The plans
+themselves are captured without executing them. Run from the repo root:
 ``python tools/explain_audit.py``.
 """
 

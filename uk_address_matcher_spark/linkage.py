@@ -249,9 +249,9 @@ def link_cleaned(
         # checkpoint.FORMAT_VERSION)
         pred = checkpointer.checkpoint(pred, "pass1_candidates")
     # no cache in the in-memory path: the second pass reads the
-    # predictions exactly once (its own per_pair cache covers the
-    # multi-branch reuse), so a pass-1 cache would only pay an extra
-    # 10^6-row encode for nothing
+    # predictions exactly once (one groupBy nests each block's rows and
+    # unnests them, no fan-out), so a pass-1 cache would only pay an
+    # extra 10^6-row encode for nothing
     #
     # assume_pruned: score_pairs fused EXACTLY this threshold+top-n cut
     # above (prune_top_n uses the same constants), so the second pass's

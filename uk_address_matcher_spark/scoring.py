@@ -614,6 +614,25 @@ def attach_numeric_tf(df: DataFrame, numeric_tf: DataFrame, suffix: str) -> Data
     return df
 
 
+def _attach_sides(
+    df: DataFrame, left: DataFrame, right: DataFrame, broadcast_sides: bool
+) -> DataFrame:
+    """Join ``left`` on unique_id_l and ``right`` on unique_id_r.
+
+    Broadcast: the two-key attach otherwise re-exchanges the n_pairs-row
+    (pairs x left-signature) intermediate to co-locate on unique_id_r
+    (5.1 GB of shuffle read at 1M docs / 43M pairs); broadcast, scan ->
+    attach -> kernel -> threshold filter is ONE map-side stage.
+    Shuffle-hash, for sides over the size gate (_sides_broadcastable):
+    sort-merge would sort 10^6-10^9 wide (array-carrying) rows per side;
+    hashing the cleaned side is cheaper."""
+
+    def hinted(side: DataFrame) -> DataFrame:
+        return F.broadcast(side) if broadcast_sides else side.hint("shuffle_hash")
+
+    return df.join(hinted(left), "unique_id_l").join(hinted(right), "unique_id_r")
+
+
 @X.scoped
 def score_pairs(
     pairs: DataFrame,
@@ -665,28 +684,7 @@ def score_pairs(
     right = _side(cleaned_r, numeric_tf, "_r", rf=False)
     if broadcast_sides is None:
         broadcast_sides = _sides_broadcastable(cleaned_l, cleaned_r)
-    if broadcast_sides:
-        # BROADCAST the compact sides: the two-key attach otherwise
-        # re-exchanges the (pairs x left-signature) INTERMEDIATE — n_pairs
-        # wide rows — to co-locate on unique_id_r (measured 5.1 GB of
-        # shuffle read feeding pass-1 at 1M docs / 43M pairs; the write,
-        # lz4 both ways and UnsafeRow serde of that intermediate is pure
-        # overhead). With both sides broadcast the scan->attach->kernel->
-        # threshold-filter pipeline is ONE map-side stage and the 43M-row
-        # intermediate never exists off-CPU-cache. Size-gated (env
-        # SPARK_GRAFT_BROADCAST_SIDES_ROWS): at cluster scale with
-        # billions of side rows the gate fails and the shuffle-hash plan
-        # below remains the 100-TB path.
-        df = pairs.join(F.broadcast(left), "unique_id_l").join(
-            F.broadcast(right), "unique_id_r"
-        )
-    else:
-        # shuffle-hash: sort-merge would sort 10^6-10^9 wide
-        # (array-carrying) rows per side; hashing the (small) cleaned
-        # side is strictly cheaper
-        df = pairs.join(left.hint("shuffle_hash"), "unique_id_l").join(
-            right.hint("shuffle_hash"), "unique_id_r"
-        )
+    df = _attach_sides(pairs, left, right, broadcast_sides)
 
     bf_sqls = comparison_bf_sqls()
     df = df.selectExpr(
@@ -777,14 +775,8 @@ def attach_display_columns(
         ]
         want_l += matching + ["common_end_tokens_hist"]
         want_r += matching
-    if broadcast_sides:
-        df = df.join(
-            F.broadcast(_reatt(cleaned_l, "_l", want_l)), "unique_id_l"
-        ).join(F.broadcast(_reatt(cleaned_r, "_r", want_r)), "unique_id_r")
-    else:
-        df = df.join(
-            _reatt(cleaned_l, "_l", want_l).hint("shuffle_hash"), "unique_id_l"
-        ).join(_reatt(cleaned_r, "_r", want_r).hint("shuffle_hash"), "unique_id_r")
+    left, right = _reatt(cleaned_l, "_l", want_l), _reatt(cleaned_r, "_r", want_r)
+    df = _attach_sides(df, left, right, broadcast_sides)
 
     if not retain_matching_columns:
         keep = {

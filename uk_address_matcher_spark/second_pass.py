@@ -9,10 +9,11 @@ Spark plan shape: the threshold + top-n cut (prune_candidates: one
 shuffle on unique_id_r; linkage applies it inside score_pairs), then
 three stages of one projection each, all partition-local in unique_id_r:
  - per pair (steps 3-4): strip common end tokens, tokenise both sides;
- - per block (step 5): groupBy(unique_id_r) pools the block's tokens,
-   then one projection builds the block histograms and their overlap
-   with the messy record (same key: no extra exchange under AQE);
- - rescoring (steps 6-8): join the block row back (same key), one
+ - per block (step 5): groupBy(unique_id_r) nests the block's pair rows
+   and pools its tokens, then one projection builds the block
+   histograms and their overlap with the messy record (same key: no
+   extra exchange under AQE);
+ - rescoring (steps 6-8): unnest the block's rows (inline), one
    projection of the pinned intermediates and the weight adjustment,
    and one output projection.
 The block and rescoring projections read columns defined earlier in the
@@ -27,8 +28,8 @@ Representation choices vs the reference:
    lossless)
  - histograms are map<string, long> built by expression over the (small)
    per-block arrays
- - block token pools are collected as struct(unique_id_l, tokens) and
-   array_sort'ed so the flattened order — and hence the cross-candidate
+ - block rows are collected as structs led by unique_id_l and
+   array_sort'ed so the token pool's order — and hence the cross-candidate
    bigram artifacts the reference also has — is DETERMINISTIC (DuckDB's
    array_agg order is accidental; collect_list order is too, so we pin it)
  - the map/array algebra is emitted as SQL text (sqlexpr module doc:
@@ -215,54 +216,39 @@ def improve_predictions_using_distinguishing_tokens(
         f"{_tokenise('original_address_concat_l', 'postcode_l')} AS tokens_l",
         f"{_tokenise(addr_r_stripped, 'postcode_r')} AS tokens_r",
     )
-    # The block histograms are computed ONCE PER BLOCK in the groupBy
-    # branch below (a window formulation would recompute them once per
-    # member row — measured as the second-heaviest CPU stage in the
-    # pipeline and the worst memory-bandwidth inflator at high
-    # parallelism). per_pair is cached AND materialised (count) before
-    # fan-out: its two consumers (the groupBy branch and the join-back)
-    # would otherwise race to fill the cache inside one job, each
-    # recomputing the whole upstream scoring pipeline. The groupBy and
-    # join share the top-n window's unique_id_r hash partitioning, so
-    # neither adds an exchange.
+    # Step 5, per block: the histograms are computed ONCE PER BLOCK (a
+    # window formulation recomputed them per member row — the
+    # second-heaviest CPU stage in the pipeline). The block's own pair
+    # rows (at most top_n) are nested into the aggregate, sorted by
+    # unique_id_l (unique within a block, so the token pool's order is
+    # deterministic), and unnested after the block projection: per_pair
+    # has one consumer and no join back. In memory, the groupBy reuses the
+    # top-n window's unique_id_r partitioning (no exchange).
     if checkpointer is not None:
-        # under a checkpointer the barrier is DURABLE: the rescoring pass
-        # becomes resumable mid-way (a kill between pass 1 and pass 2
-        # restarts from pass2_per_pair, not from blocking) and the wide
-        # tokenised rows leave executor memory.
+        # The barrier is DURABLE: a kill between the passes restarts from
+        # pass2_per_pair. Read back, the groupBy needs a hash exchange on
+        # unique_id_r; AQE's byte-targeted coalescing sizes it to ~1 ragged
+        # wave (9-13 tasks at 8 cores measured) for this CPU-dense stage, so
+        # an explicit repartition on the SAME key replaces that exchange with
+        # 3 tasks/core, balanced at every width.
         per_pair = checkpointer.checkpoint(per_pair, "pass2_per_pair")
-        # Size the pass-2 exchange by CORES, not bytes: reading the
-        # barrier back from storage, the groupBy/join below need a hash
-        # exchange on unique_id_r anyway, and AQE's byte-targeted
-        # coalescing sizes it to ~1 ragged wave (9-13 tasks at 8 cores
-        # measured) because this stage is CPU-dense per byte (~3 CPU-s/MB
-        # of map algebra over a ~35 MB artifact). An explicit repartition
-        # on the SAME key replaces — not adds to — that exchange (the
-        # groupBy and the join-back both reuse the partitioning), and
-        # 3 tasks/core keeps the wave balanced at every width. The
-        # in-memory path below keeps the window's cached partitioning
-        # (zero exchanges) — repartitioning there would ADD an exchange.
         par = 3 * per_pair.sparkSession.sparkContext.defaultParallelism
         per_pair = per_pair.repartition(par, "unique_id_r")
-    else:
-        per_pair = per_pair.cache()
-        per_pair.count()
 
-    # Step 5, per block: the candidates' token pool, its token and bigram
-    # histograms, and their overlap with the messy record; the overlap
-    # maps read the pinned columns as lateral aliases (module docstring).
     s = X.gensym("s")
-    block_aggs = (
+    blocks = (
         per_pair.groupBy("unique_id_r")
         .agg(
             F.expr("first(tokens_r)").alias("tokens_r"),
             F.expr(
-                f"flatten(transform(array_sort(collect_list("
-                f"struct(unique_id_l, tokens_l))), {s} -> {s}.tokens_l))"
-            ).alias("tokens_in_block_l"),
+                "array_sort(collect_list(struct(unique_id_l, match_weight, "
+                "match_probability, original_address_concat_l, "
+                "original_address_concat_r, postcode_l, postcode_r, tokens_l)))"
+            ).alias("block_rows"),
         )
         .selectExpr(
-            "unique_id_r",
+            "unique_id_r", "tokens_r", "block_rows",
+            f"flatten(transform(block_rows, {s} -> {s}.tokens_l)) AS tokens_in_block_l",
             f"{X.pin(_hist('tokens_in_block_l'), 11)} AS hist_all_tokens_in_block_l",
             f"{X.pin(_hist(_bigrams('tokens_in_block_l')), 12)} AS hist_all_bigrams_in_block_l",
             f"{X.pin(_bigrams('tokens_r'), 20)} AS bigrams_r",
@@ -311,7 +297,7 @@ def improve_predictions_using_distinguishing_tokens(
                                 "tokens_elsewhere_in_block_but_not_this"), 18),
         ("mw_adjustment", adj, 19),
     ]
-    rescored = per_pair.join(block_aggs, "unique_id_r").selectExpr(
+    rescored = blocks.selectExpr("*", "inline(block_rows)").selectExpr(
         "*", *[f"{X.pin(sql, seed)} AS {name}" for name, sql, seed in rescoring]
     )
     # output column set matches the reference's final `matches` table

@@ -8,6 +8,7 @@ Defaults chosen for the 100TB design point and safe for local[*] testing:
  - compiled-class cache of 1024 entries (Spark's default 100 is below
    the ~180 classes one linkage + clustering run generates, so repeat
    runs recompiled every class)
+ - driver heap of min(8g, half the host's memory) (_default_driver_memory)
 """
 
 from __future__ import annotations
@@ -52,6 +53,22 @@ def _default_local_dir() -> str | None:
         if free_gb < min_free_gb:
             return None
     return os.path.join(shm, f"spark-local-{os.getuid()}")
+
+
+_MEMINFO = "/proc/meminfo"
+
+
+def _default_driver_memory() -> str:
+    """min(8g, MemTotal / 2), or 8g when MemTotal cannot be read. In local
+    mode the driver heap is the whole engine's heap: a fixed 8g on a 15 GB
+    host let a test JVM grow until the kernel killed it, and every later
+    call failed as a refused Py4J connection."""
+    try:
+        with open(_MEMINFO) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "8g"
+    return f"{kb // 2048}m" if kb < 16 << 20 else "8g"
 
 
 _JAVA_OPTS_KEYS = ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions")
@@ -106,12 +123,11 @@ def _session_conf(
             "16m" if master.startswith("local") else "128m",
         ),
         # NOTE: spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-        # stays at its default (false). Enabling it lets AQE coalesce
-        # cached builds by BYTES, which collapsed the second pass's
-        # per_pair cache (50MB but ~100 CPU-core-s of downstream map
-        # algebra) to 13 partitions — a 2x wall regression. Small cached
-        # frames size their own partitioning explicitly instead
-        # (clustering.py loop_parts).
+        # stays at its default (false): enabling it lets AQE coalesce a
+        # cached frame's partitions by BYTES, too few for a cache that is
+        # small in bytes but feeds CPU-dense work. Small cached frames size
+        # their own partitioning explicitly instead (clustering.py
+        # loop_parts).
         # Unordered limit-collects (side-table guard collects, the
         # clustering conflict/disjointness collects) run through
         # executeTake, which by default probes 1 shuffle partition, then
@@ -128,7 +144,8 @@ def _session_conf(
         "spark.sql.session.timeZone": "UTC",
         # deterministic, locale-independent string comparison
         "spark.sql.legacy.respectNullabilityInTextDatasetConversion": "true",
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY")
+        or _default_driver_memory(),
         "spark.ui.enabled": "false",
         # One link_addresses + cluster_predictions run generates ~180
         # distinct classes (177-185 Janino compilations for a benchmark
